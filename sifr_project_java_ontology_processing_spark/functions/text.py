@@ -27,11 +27,6 @@ def normalize_code(code: Column) -> Column:
     return F.regexp_replace(code, _CODE_RX, r"$1.$2")
 
 
-def is_cui(col: Column) -> Column:
-    """P4 — full-match CUI-shape predicate (CUIOntologyDelegateImpl.java:123-138)."""
-    return col.rlike(CUI_PATTERN)
-
-
 def strip_xsd_type(lit: Column) -> Column:
     """P5 — ``lit^^xsd:type`` → ``lit`` (CUIOntologyDelegateImpl.java:31-39)."""
     return F.split(lit, r"\^\^").getItem(0)

@@ -65,6 +65,18 @@ def _star_round(edges: DataFrame, large: bool) -> DataFrame:
     return out.where(F.col("u") != F.col("v")).distinct()
 
 
+def _local_pairs(spark, rows: list[tuple], node_type) -> DataFrame:
+    """(iri, canonical_iri) rows as a broadcast-hinted local relation of
+    the caller's node type (string IRIs or numeric ids), built through
+    the Arrow path of ``createDataFrame`` from pandas."""
+    import pandas as pd
+    from pyspark.sql.types import StructField, StructType
+
+    cols = ["iri", "canonical_iri"]
+    schema = StructType([StructField(c, node_type) for c in cols])
+    return F.broadcast(spark.createDataFrame(pd.DataFrame(rows, columns=cols), schema))
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -81,11 +93,14 @@ def connected_components(
     equivalence-edge graphs are usually *dimension*-sized (ontology
     mappings), so when the deduplicated edge count fits under
     ``driver_threshold`` the components are solved with a driver-side
-    union-find in one pass (one collect of a dimension table — the same
-    cost class as building a broadcast join side) instead of O(log n)
-    distributed rounds each costing a checkpoint + fixpoint probe. The
-    distributed large-star/small-star path below remains the scale
-    route for fact-sized graphs; set ``driver_threshold=0`` to force it.
+    union-find in one pass: ONE ``limit(driver_threshold + 1)`` collect
+    probes the size and fetches the edges at once (the same cost class
+    as building a broadcast join side), and the result comes back as a
+    broadcast-hinted local relation — its size is known to the planner
+    and scanning it starts no Python worker. The distributed
+    large-star/small-star path below remains the scale route for
+    fact-sized graphs (only it materializes the edge set); set
+    ``driver_threshold=0`` to force it.
     """
     cur = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -93,12 +108,8 @@ def connected_components(
         .where(F.col("u") != F.col("v"))
         .distinct()
     )
-    cur = materialize_once(cur) if not reliable else cur.checkpoint(eager=True)
-
-    n_edges = cur.count()
-    if n_edges == 0:
-        return cur.select(F.col("u").alias("iri"), F.col("v").alias("canonical_iri"))
-    if n_edges <= driver_threshold:
+    sample = cur.limit(driver_threshold + 1).collect()
+    if len(sample) <= driver_threshold:
         parent: dict = {}
 
         def find(x):
@@ -110,24 +121,14 @@ def connected_components(
                 parent[x], x = root, parent[x]
             return root
 
-        for row in cur.toLocalIterator():
-            ra, rb = find(row["u"]), find(row["v"])
+        for u, v in sample:
+            ra, rb = find(u), find(v)
             if ra != rb:
                 parent[max(ra, rb)] = min(ra, rb)
-        rows = [(n, find(n)) for n in parent]
-        rows = [(n, r) for n, r in rows if n != r]
-        # preserve the caller's node type (string IRIs or numeric doc ids)
-        from pyspark.sql.types import StructField, StructType
+        rows = [(n, r) for n, r in ((n, find(n)) for n in parent) if n != r]
+        return _local_pairs(edges.sparkSession, rows, cur.schema["u"].dataType)
 
-        node_type = cur.schema["u"].dataType
-        schema = StructType(
-            [
-                StructField("iri", node_type),
-                StructField("canonical_iri", node_type),
-            ]
-        )
-        return edges.sparkSession.createDataFrame(rows, schema)
-
+    cur = materialize_once(cur) if not reliable else cur.checkpoint(eager=True)
     for _ in range(max_iter):
         after_large = _star_round(cur, large=True)
         after_small = _star_round(after_large, large=False)

@@ -4,34 +4,40 @@ Re-expresses the reference's per-class fallback loops
 (cli/enrichment/OntologyCUIProcessor.java:121-231 ``processCUIs`` /
 ``findCUIs``, :273-297 ``processTUIs``) as ONE declarative plan:
 
-    classes LEFT JOIN (each candidate source, pre-aggregated to arrays)
-            → coalesce in priority order + stage tag
+    (classes ∪ each candidate source, tagged) → one per-concept
+            aggregate → coalesce in priority order + stage tag
 
 Priority (reference findCUIs): own ``umls:cui`` → CUI-shaped altLabels
 → mapping targets' CUIs → UMLS lookup by code → (optional, separate
 operator) similarity disambiguation → reject.
 
 Where the reference does O(classes) Redis-memoized point lookups
-(BaseOntologyDelegate.java:257-283), each source here is joined exactly
+(BaseOntologyDelegate.java:257-283), each input here is read exactly
 once; negative caching (utils/EmptyResultsCache.java) is simply the
-null side of the left join (SURVEY.md §4.1).
+empty set of a source that holds nothing for a concept (SURVEY.md §4.1).
 
 Scale notes:
-  * every right side is a pre-aggregated dimension (one row per
-    concept) → joins can't explode and are hinted ``broadcast`` —
-    dimension tables are ontology-sized (≤ millions), facts are
-    page-mention-sized (billions);
+  * the class frame, the notation codes and every CUI source share the
+    concept key, so ONE tagged-union hash aggregate (``_fused_agg``)
+    yields class membership, the min notation code and each source's
+    sorted set — one shuffle, whatever the number of stages;
+  * the code stage is a code → CUIs dimension (one ``umls`` groupBy)
+    broadcast to the aggregate's output; the TUI cascade reads the CUI
+    cascade once (``explode_outer`` → broadcast MRSTY join → the same
+    aggregate). Dimension tables are ontology-sized (≤ millions), facts
+    are page-mention-sized (billions), so every lookup side broadcasts;
   * the per-stage short-circuit of the reference (later stages only
     fire for still-empty keys) is semantically identical to
-    coalesce-after-left-joins; Catalyst prunes columns, and the join
-    fan-out is bounded by construction, so there is no wasted work to
-    short-circuit;
+    coalesce-after-aggregation; the fan-out is bounded by construction,
+    so there is no wasted work to short-circuit;
   * stage counters (reference stats/CUIOntologyStats.java:7-33) fall
     out of ``groupBy("cui_stage").count()`` — no accumulators (those
     are at-least-once under task retries).
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -58,54 +64,70 @@ TUI_STAGE_UMLS = "tui_from_umls_by_cui"
 TUI_STAGE_MAPPING = "tui_in_mappings"
 TUI_STAGE_NONE = "remaining_without_tui"
 
+
 def _empty_arr():
     return F.array().cast("array<string>")
 
 
-def _agg_set(df: DataFrame, key: str, value: str, out: str) -> DataFrame:
-    """Pre-aggregate a candidate source to one sorted-distinct array per
-    key — the TreeSet semantics of the reference (O3 determinism)."""
-    return df.groupBy(F.col(key).alias("concept_iri")).agg(
-        F.sort_array(F.collect_set(F.col(value))).alias(out)
-    )
+def _fused_agg(
+    sources: list[tuple[DataFrame | None, str | None, str | None]],
+    keep: tuple[str, ...] = (),
+) -> DataFrame:
+    """ONE tagged-union hash aggregate per concept over N candidate
+    streams ``(concept_iri, value)``, each given as ``(df, out, how)``
+    with ``how`` ``"set"`` (sorted-distinct array — the reference's
+    TreeSet semantics, O3) or ``"min"`` (its "first of a TreeSet").
 
+    ``sources[0]`` is the class frame: only its concepts get a row, and
+    it alone supplies the ``keep`` columns (functionally dependent on
+    the concept). Absent sources (``df=None``) come back as null
+    columns; a class absent from a present source gets an EMPTY array
+    where a per-source left join would give NULL — both read as "stage
+    empty" downstream (size() > 0), which the exact cascade oracle
+    tests pin.
 
-def _agg_sets_fused(
-    sources: list[tuple[DataFrame | None, str]],
-) -> DataFrame | None:
-    """Fused multi-source set aggregation: N candidate streams
-    ``(concept_iri, value)`` → ONE row per concept with one
-    sorted-distinct array per PRESENT source (absent sources get no
-    column — the caller backfills null arrays).
-
-    This replaces N separate groupBy+broadcast-join pairs with a single
-    tagged union → one hash aggregate → one join: the cascade's shuffle
-    count is constant in the number of stages, at any dimension size
-    (VERDICT round-1 perf note: "fuse cascade's _agg_set shuffles where
-    keys align"). Per-source sets come out of conditional collect_set
-    (nulls are skipped by aggregation semantics); a concept absent from
-    a source gets an EMPTY array where the unfused shape produced NULL —
-    both read as "stage empty" downstream (size() > 0), which the exact
-    cascade oracle tests pin."""
-    present = [(df, out) for df, out in sources if df is not None]
-    if not present:
-        return None
-    tagged = None
-    for i, (df, _out) in enumerate(present):
-        t = df.select(
-            F.col("concept_iri"),
-            F.col("value").alias("_v"),
-            F.lit(i).alias("_src"),
+    This replaces N groupBy + broadcast-join pairs (and the final join
+    back to the class frame) with one shuffle whose width is constant in
+    the number of stages, at any dimension size."""
+    parts, aggs = [], [F.bool_or(F.col("_src") == 0).alias("_class")]
+    aggs += [F.first(c, ignorenulls=True).alias(c) for c in keep]
+    for i, (df, out, how) in enumerate(sources):
+        if df is None:
+            continue
+        parts.append(
+            df.select(
+                "concept_iri",
+                *(keep if i == 0 else ()),
+                F.col("value").cast("string").alias("_v"),
+                F.lit(i).alias("_src"),
+            )
         )
-        tagged = t if tagged is None else tagged.unionByName(t)
-    return tagged.groupBy("concept_iri").agg(
-        *[
-            F.sort_array(
-                F.collect_set(F.when(F.col("_src") == i, F.col("_v")))
-            ).alias(out)
-            for i, (_df, out) in enumerate(present)
-        ]
-    )
+        if out is not None:
+            v = F.when(F.col("_src") == i, F.col("_v"))
+            agg = F.min(v) if how == "min" else F.sort_array(F.collect_set(v))
+            aggs.append(agg.alias(out))
+    tagged = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
+    out_df = tagged.groupBy("concept_iri").agg(*aggs).where("_class").drop("_class")
+    for df, out, how in sources:
+        if df is None:
+            out_df = out_df.withColumn(
+                out, F.lit(None).cast("string" if how == "min" else "array<string>")
+            )
+    return out_df
+
+
+def _pick(candidates: list[tuple], none_stage: str) -> tuple:
+    """Priority cascade → (values, stage) columns: the first candidate
+    ``(condition, values, stage_name)`` whose condition holds wins."""
+    (cond, vals, name), *rest = candidates
+    values, stage = F.when(cond, vals), F.when(cond, name)
+    for cond, vals, name in rest:
+        values, stage = values.when(cond, vals), stage.when(cond, name)
+    return values.otherwise(_empty_arr()), stage.otherwise(none_stage)
+
+
+def _nonempty(c: str):
+    return F.size(F.col(c)) > 0
 
 
 # Code-property priority chain (reference code/CompositeCodeFinder.java:24-40):
@@ -115,6 +137,52 @@ CODE_PREDICATES = [
     "http://chu-rouen.fr/cismef/ICD-10#cdCode",              # ICDCodeFinder.java
     "http://purl.lirmm.fr/ontology/ICPC2P#ICPCCODE",         # ICPC2PCodeFinder.java
 ]
+
+
+def _code_sources(
+    ontology_labels: DataFrame, code_triples: DataFrame | None
+) -> list[tuple[DataFrame, str, str]]:
+    """The prioritized code-property chain as ``_fused_agg`` "min"
+    sources (each property's "first of a TreeSet" = min, O3)."""
+    sources = [
+        (
+            ontology_labels.where(F.col("label_kind") == "notation").select(
+                "concept_iri", F.col("label").alias("value")
+            ),
+            "_code0",
+            "min",
+        )
+    ]
+    if code_triples is not None:
+        sources += [
+            (
+                code_triples.where(F.col("pred") == pred).select(
+                    "concept_iri", F.col("code").alias("value")
+                ),
+                f"_code{i}",
+                "min",
+            )
+            for i, pred in enumerate(CODE_PREDICATES[1:], start=1)
+        ]
+    return sources
+
+
+def _with_code(df: DataFrame, code_sources: list) -> DataFrame:
+    """First non-null code of the chain, then the URI fragment before
+    ``_`` (code/URICodeFinder.java:16-28)."""
+    cols = [out for _df, out, _how in code_sources]
+    frag = uri_fragment_code(F.col("concept_iri"))
+    return df.withColumn(
+        "code", F.coalesce(*[F.col(c) for c in cols], F.when(frag != "", frag))
+    ).drop(*cols)
+
+
+def _classes_source(classes: DataFrame) -> tuple[DataFrame, None, None]:
+    return (
+        classes.select("concept_iri", F.lit(None).cast("string").alias("value")),
+        None,
+        None,
+    )
 
 
 def find_codes(
@@ -130,41 +198,11 @@ def find_codes(
     ``ontology_labels`` rows with label_kind='notation' are the
     skos:notation source; ``code_triples`` (concept_iri, pred, code)
     optionally supplies the icd/icpc2p property assertions.
-    Returns (concept_iri, code) with code possibly null.
+    Returns (concept_iri, code) with code possibly null, one row per
+    distinct class.
     """
-    out = classes
-    stage_cols: list[str] = []
-
-    notations = _agg_set(
-        ontology_labels.where(F.col("label_kind") == "notation"),
-        "concept_iri",
-        "label",
-        "_codes0",
-    ).select("concept_iri", F.col("_codes0").getItem(0).alias("_code0"))
-    out = out.join(F.broadcast(notations), "concept_iri", "left")
-    stage_cols.append("_code0")
-
-    if code_triples is not None:
-        for i, pred in enumerate(CODE_PREDICATES[1:], start=1):
-            dim = _agg_set(
-                code_triples.where(F.col("pred") == pred).select(
-                    "concept_iri", F.col("code").alias("c")
-                ),
-                "concept_iri",
-                "c",
-                f"_codes{i}",
-            ).select(
-                "concept_iri", F.col(f"_codes{i}").getItem(0).alias(f"_code{i}")
-            )
-            out = out.join(F.broadcast(dim), "concept_iri", "left")
-            stage_cols.append(f"_code{i}")
-
-    frag = uri_fragment_code(F.col("concept_iri"))
-    out = out.withColumn(
-        "code",
-        F.coalesce(*[F.col(c) for c in stage_cols], F.when(frag != "", frag)),
-    )
-    return out.drop(*stage_cols)
+    sources = _code_sources(ontology_labels, code_triples)
+    return _with_code(_fused_agg([_classes_source(classes), *sources]), sources)
 
 
 def cui_cascade(
@@ -186,9 +224,11 @@ def cui_cascade(
     target_cuis:    (concept_iri, cui) for the *target* ontology's classes
     lat:            optional UMLS language restriction (SQLUMLSDelegate
                     :166-191 with-lang vs :193-217 without)
-    """
-    spark_classes = find_codes(classes.select("concept_iri").distinct(), ontology_labels)
 
+    Plan: class membership, the notation code and the own/alt/mapping
+    CUI sets come out of ONE tagged-union aggregate (each input read
+    once); the code stage is one broadcast code → CUIs lookup.
+    """
     # J1 — own CUIs
     own = (
         own_cuis.select("concept_iri", F.col("cui").alias("value"))
@@ -220,50 +260,39 @@ def cui_cascade(
     else:
         mapped = None
 
-    # J4 — UMLS by code (broadcast MRCONSO dim; DISTINCT per :177,204)
+    code_sources = _code_sources(ontology_labels, None)
+    per_class = _with_code(
+        _fused_agg(
+            [
+                _classes_source(classes),
+                *code_sources,
+                (own, "own_cuis", "set"),
+                (alt, "alt_cuis", "set"),
+                (mapped, "mapping_cuis", "set"),
+            ]
+        ),
+        code_sources,
+    )
+
+    # J4 — UMLS by code (one broadcast code → CUIs dim; DISTINCT per :177,204)
     umls = umls_concepts
     if lat is not None:
         umls = umls.where(F.col("lat") == lat)
-    code_cuis = (
-        spark_classes.where(F.col("code").isNotNull())
-        .select("concept_iri", "code")
-        .join(F.broadcast(umls.select("code", "cui")), "code")
-        .select("concept_iri", F.col("cui").alias("value"))
+    by_code = umls.groupBy("code").agg(
+        F.sort_array(F.collect_set("cui")).alias("code_cuis")
     )
+    out = per_class.join(F.broadcast(by_code), "code", "left")
 
-    # all four stages share the concept_iri key: ONE tagged-union hash
-    # aggregate + ONE broadcast join instead of four of each
-    stage_sources = [
-        (own, "own_cuis"),
-        (alt, "alt_cuis"),
-        (mapped, "mapping_cuis"),
-        (code_cuis, "code_cuis"),
-    ]
-    fused = _agg_sets_fused(stage_sources)
-    out = spark_classes.join(F.broadcast(fused), "concept_iri", "left")
-    for dim, col in stage_sources:
-        if dim is None:
-            out = out.withColumn(col, F.lit(None).cast("array<string>"))
-
-    def nonempty(c: str):
-        return F.size(F.col(c)) > 0
-
-    out = out.withColumn(
-        "cuis",
-        F.when(nonempty("own_cuis"), F.col("own_cuis"))
-        .when(nonempty("alt_cuis"), F.col("alt_cuis"))
-        .when(nonempty("mapping_cuis"), F.col("mapping_cuis"))
-        .when(nonempty("code_cuis"), F.col("code_cuis"))
-        .otherwise(_empty_arr()),
-    ).withColumn(
-        "cui_stage",
-        F.when(nonempty("own_cuis"), STAGE_OWN)
-        .when(nonempty("alt_cuis"), STAGE_ALT)
-        .when(nonempty("mapping_cuis"), STAGE_MAPPING)
-        .when(nonempty("code_cuis"), STAGE_CODE)
-        .otherwise(STAGE_NONE),
+    cuis, stage = _pick(
+        [
+            (_nonempty("own_cuis"), F.col("own_cuis"), STAGE_OWN),
+            (_nonempty("alt_cuis"), F.col("alt_cuis"), STAGE_ALT),
+            (_nonempty("mapping_cuis"), F.col("mapping_cuis"), STAGE_MAPPING),
+            (_nonempty("code_cuis"), F.col("code_cuis"), STAGE_CODE),
+        ],
+        STAGE_NONE,
     )
-    return out.select("concept_iri", "code", "cuis", "cui_stage")
+    return out.select("concept_iri", "code", cuis.alias("cuis"), stage.alias("cui_stage"))
 
 
 def tui_cascade(
@@ -284,20 +313,25 @@ def tui_cascade(
     compat=True the mapping stage therefore looks up the *source* IRI in
     the target-TUI dim (matching the reference's, usually-empty, result).
 
-    → (concept_iri, cuis, cui_stage, tuis array<string>, tui_stage).
+    → (concept_iri, code, cuis, cui_stage, tuis array<string>, tui_stage).
+
+    ``cascade_out`` is read once: ``explode_outer(cuis)`` (a CUI-less
+    class keeps one row), a broadcast MRSTY join (J5), then the same
+    tagged-union aggregate as cui_cascade, which also regroups the
+    cascade columns per concept.
     """
+    keep = ("code", "cuis", "cui_stage")
+    by_cui = (
+        cascade_out.select(
+            "concept_iri", *keep, F.explode_outer("cuis").alias("cui")
+        )
+        .join(F.broadcast(umls_semtypes.select("cui", "tui")), "cui", "left")
+        .select("concept_iri", *keep, F.col("tui").alias("value"))
+    )
     own = (
         own_tuis.select("concept_iri", F.col("tui").alias("value"))
         if own_tuis is not None
         else None
-    )
-
-    # MRSTY lookup for every found CUI (J5): explode bounded arrays,
-    # broadcast-join the dim, re-aggregate.
-    by_cui = (
-        cascade_out.select("concept_iri", F.explode("cuis").alias("cui"))
-        .join(F.broadcast(umls_semtypes), "cui")
-        .select("concept_iri", F.col("tui").alias("value"))
     )
 
     if target_tuis is not None:
@@ -318,38 +352,25 @@ def tui_cascade(
     else:
         mapped = None
 
-    # same fusion as cui_cascade: one hash aggregate + one broadcast
-    # join regardless of how many TUI stages are active
-    stage_sources = [
-        (own, "own_tuis"),
-        (by_cui, "umls_tuis"),
-        (mapped, "mapping_tuis"),
-    ]
-    fused = _agg_sets_fused(stage_sources)
-    out = cascade_out.join(F.broadcast(fused), "concept_iri", "left")
-    for dim, col in stage_sources:
-        if dim is None:
-            out = out.withColumn(col, F.lit(None).cast("array<string>"))
-
-    def nonempty(c: str):
-        return F.size(F.col(c)) > 0
-
-    has_cuis = F.size(F.col("cuis")) > 0
-    out = out.withColumn(
-        "tuis",
-        F.when(nonempty("own_tuis"), F.col("own_tuis"))
-        .when(has_cuis & nonempty("umls_tuis"), F.col("umls_tuis"))
-        .when(~has_cuis & nonempty("mapping_tuis"), F.col("mapping_tuis"))
-        .otherwise(_empty_arr()),
-    ).withColumn(
-        "tui_stage",
-        F.when(nonempty("own_tuis"), TUI_STAGE_OWN)
-        .when(has_cuis & nonempty("umls_tuis"), TUI_STAGE_UMLS)
-        .when(~has_cuis & nonempty("mapping_tuis"), TUI_STAGE_MAPPING)
-        .otherwise(TUI_STAGE_NONE),
+    out = _fused_agg(
+        [
+            (by_cui, "umls_tuis", "set"),
+            (own, "own_tuis", "set"),
+            (mapped, "mapping_tuis", "set"),
+        ],
+        keep=keep,
+    )
+    has_cuis = _nonempty("cuis")
+    tuis, stage = _pick(
+        [
+            (_nonempty("own_tuis"), F.col("own_tuis"), TUI_STAGE_OWN),
+            (has_cuis & _nonempty("umls_tuis"), F.col("umls_tuis"), TUI_STAGE_UMLS),
+            (~has_cuis & _nonempty("mapping_tuis"), F.col("mapping_tuis"), TUI_STAGE_MAPPING),
+        ],
+        TUI_STAGE_NONE,
     )
     return out.select(
-        "concept_iri", "code", "cuis", "cui_stage", "tuis", "tui_stage"
+        "concept_iri", *keep, tuis.alias("tuis"), stage.alias("tui_stage")
     )
 
 
@@ -382,7 +403,6 @@ def umls_comparison_counters(
     → (counter, value) rows, all three counters always present (0 when
     no class qualifies) so the stats CSV row shape is stable.
     """
-    spark = cascade_out.sparkSession
     umls = umls_concepts
     if lat is not None:
         umls = umls.where(F.col("lat") == lat)
@@ -396,43 +416,24 @@ def umls_comparison_counters(
         "umls_n",
         F.when(F.col("code").isNotNull(), F.coalesce("umls_n", F.lit(0))),
     )
-    counts = compared.agg(
-        F.count(F.lit(1)).alias("classes_with_ambiguous_cui"),
-        F.sum(
-            F.when(F.col("umls_n") > F.size("cuis"), 1).otherwise(0)
-        ).alias("classes_with_less_cuis_than_umls"),
-        F.sum(
-            F.when(F.col("umls_n") < F.size("cuis"), 1).otherwise(0)
-        ).alias("classes_with_more_cuis_than_umls"),
-    )
-    names = spark.createDataFrame(
-        [
-            ("classes_with_ambiguous_cui",),
-            ("classes_with_less_cuis_than_umls",),
-            ("classes_with_more_cuis_than_umls",),
-        ],
-        "counter string",
-    )
-    melted = counts.select(
+    # a global aggregate always yields exactly one row, so all three
+    # counters are present even when no class qualifies
+    counters = {
+        "classes_with_ambiguous_cui": F.count(F.lit(1)),
+        "classes_with_less_cuis_than_umls": F.count_if(F.col("umls_n") > F.size("cuis")),
+        "classes_with_more_cuis_than_umls": F.count_if(F.col("umls_n") < F.size("cuis")),
+    }
+    counts = compared.agg(*[agg.alias(name) for name, agg in counters.items()])
+    return counts.select(
         F.explode(
             F.array(
                 *[
-                    F.struct(F.lit(c).alias("counter"), F.coalesce(F.col(c), F.lit(0)).cast("long").alias("value"))
-                    for c in (
-                        "classes_with_ambiguous_cui",
-                        "classes_with_less_cuis_than_umls",
-                        "classes_with_more_cuis_than_umls",
-                    )
+                    F.struct(F.lit(name).alias("counter"), F.col(name).alias("value"))
+                    for name in counters
                 ]
             )
         ).alias("kv")
-    ).select(F.col("kv.counter").alias("counter"), F.col("kv.value").alias("value"))
-    # left join against the fixed name list: all three rows even if the
-    # agg produced an empty frame upstream (it can't — agg always yields
-    # one row — but the join keeps the contract explicit)
-    return names.join(melted, "counter", "left").select(
-        "counter", F.coalesce("value", F.lit(0)).alias("value")
-    )
+    ).select("kv.counter", "kv.value")
 
 
 def named_classes(triples: DataFrame) -> DataFrame:

@@ -38,12 +38,14 @@ def partition_counts(
 
 
 def counter_metrics(
-    df: DataFrame, run_id: str, stage: str, tag_col: str
+    df: DataFrame, run_id: str, stage: str, *tag_cols: str
 ) -> DataFrame:
-    """Outcome-tag counters (e.g. cascade ``cui_stage``) as METRICS rows
-    (part_id = -1: a run-level counter)."""
+    """Outcome-tag counters (e.g. cascade ``cui_stage``, ``tui_stage``)
+    as METRICS rows (part_id = -1: a run-level counter). Several tag
+    columns with disjoint tag values are counted in ONE aggregate."""
     return (
-        df.groupBy(F.col(tag_col).alias("counter"))
+        df.select(F.explode(F.array(*tag_cols)).alias("counter"))
+        .groupBy("counter")
         .agg(F.count(F.lit(1)).alias("value"))
         .select(
             F.lit(run_id).alias("run_id"),
@@ -83,9 +85,3 @@ def graph_diff(
     added = anti(n, o).withColumn("change", F.lit("added"))
     removed = anti(o, n).withColumn("change", F.lit("removed"))
     return added.unionByName(removed).distinct()
-
-
-def graph_diff_summary(diff: DataFrame) -> DataFrame:
-    """(pred, change, n) rollup of a ``graph_diff`` — the reviewable
-    release report. One partial-agg pass."""
-    return diff.groupBy("pred", "change").agg(F.count(F.lit(1)).alias("n"))

@@ -79,25 +79,6 @@ def label_code_pairs(
     ).withColumn("code", normalize_code(F.col("code")))
 
 
-def code_frequencies(pairs: DataFrame) -> DataFrame:
-    """A1 — count(*) per code over all occurrences."""
-    return pairs.groupBy("code").agg(F.count(F.lit(1)).alias("freq"))
-
-
-def code_label_index(pairs: DataFrame) -> DataFrame:
-    """A2 — code → sorted distinct label set (TreeSet semantics)."""
-    return pairs.groupBy("code").agg(
-        F.sort_array(F.collect_set("label")).alias("labels")
-    )
-
-
-def label_code_index(pairs: DataFrame) -> DataFrame:
-    """A3 — label → sorted distinct code set."""
-    return pairs.groupBy("label").agg(
-        F.sort_array(F.collect_set("code")).alias("codes")
-    )
-
-
 def most_frequent_code(pairs: DataFrame) -> DataFrame:
     """A4+A5 — per label: normalize candidate-code frequencies to sum 1,
     keep the argmax (freq desc, code asc tie-break).

@@ -15,9 +15,12 @@ predicates ``umls:cui`` / ``umls:tui`` / ``umls:hasSTY``
 (cuis/CUIOntologyDelegateImpl.java:19-21,41-76).
 
 Scale shape: stages 1-2 are map-only (zero shuffle) over the 100 TB
-fact table; the first shuffles appear at the mention-triple distinct
-(hash on (url,concept)) and the cascade's dimension pre-aggregations
-(ontology-sized). Canonical-IRI application to fact rows is a broadcast
+fact table. The dimension phase is ontology-sized: the cascade is one
+per-concept aggregate plus broadcast lookups, and the canonical
+dictionary is a driver-side union-find whenever the equivalence edges
+fit under the CC threshold. Triple assembly is one distinct over the
+union of the mention triples, the exploded per-concept triples and the
+subClassOf edges; canonical-IRI application to fact rows is a broadcast
 join. Head-entity skew in the distinct/groupBys is handled by AQE +
 the salted helpers (canonicalize.salted_count) for the hot counters.
 """
@@ -31,6 +34,7 @@ from pyspark.sql import functions as F
 
 from sifr_project_java_ontology_processing_spark.functions.uris import (
     RDF_TYPE,
+    RDFS_SUBCLASSOF,
     SIFR_MENTION,
     SKOS_CHANGE_NOTE,
     SKOS_CONCEPT,
@@ -141,17 +145,16 @@ def run_kg_pipeline(
 
     def dim_stage(name: str, thunk) -> DataFrame:
         """Dimension-sized stage: with a store it materializes like any
-        stage; without one it is cached EAGERLY (localCheckpoint) —
-        triple assembly references the cascade 3× and the canonical
-        dictionary 4×, and re-running the whole dim DAG (a dozen
-        broadcast builds + the CC fixpoint) per branch is pure fixed
-        cost that caps N→4N scaling efficiency (BENCH/BASELINE.md:
-        ~9.6 s constant regardless of core count). A lazy persist is
-        not enough: the union's branches run concurrently inside one
-        job and each computes the unpopulated cache. localCheckpoint
-        also CUTS THE LINEAGE, so the triple job's plan contains the
-        tiny materialized table instead of the dim DAG replicated per
-        branch."""
+        stage; without one it is cached EAGERLY (localCheckpoint). The
+        cascade and the canonical dictionary each feed several consumers
+        (triple assembly, nodes, metrics), and re-running the dim DAG
+        (the cascade aggregate and its broadcast lookups, the CC probe)
+        per consumer is pure fixed cost that caps N→4N scaling
+        efficiency (BENCH/BASELINE.md: ~9.6 s constant regardless of
+        core count). A lazy persist is not enough: concurrent consumers
+        each compute the unpopulated cache. localCheckpoint also CUTS
+        THE LINEAGE, so downstream plans contain the tiny materialized
+        table instead of the dim DAG."""
         if store is not None:
             return stage(name, thunk)
         from sifr_project_java_ontology_processing_spark.operators.materialize import (
@@ -196,7 +199,8 @@ def run_kg_pipeline(
 
     # -- stage 3: enrichment cascade over the concept dimension -------------
     def _cascade() -> DataFrame:
-        classes = ontology_labels.select("concept_iri").distinct()
+        # the cascade's per-concept aggregate dedups the classes
+        classes = ontology_labels.select("concept_iri")
         c = cui_cascade(
             classes,
             ontology_labels,
@@ -255,163 +259,109 @@ def run_kg_pipeline(
 
     # -- stage 5: triple assembly -------------------------------------------
     def _triples() -> DataFrame:
-        canon = F.broadcast(canonical)
+        # one broadcast of the canonical dictionary, reused by every
+        # join below (identical broadcast subtrees are planned once)
+        canon = F.broadcast(canonical.select("iri", "canonical_iri"))
 
-        mention_triples = (
-            mentions.join(canon, mentions.concept_iri == canonical.iri, "left")
-            .select(
-                F.col("url").alias("subj"),
-                F.lit(SIFR_MENTION).alias("pred"),
-                F.coalesce("canonical_iri", "concept_iri").alias("obj"),
-                F.lit(None).cast("string").alias("obj_lang"),
-                F.lit(False).alias("obj_is_literal"),
-                F.col("url").alias("src_url"),
-            )
-            .distinct()
-        )
-        type_triples = canonical.select(
-            F.col("canonical_iri").alias("subj"),
-            F.lit(RDF_TYPE).alias("pred"),
-            F.lit(SKOS_CONCEPT).alias("obj"),
-            F.lit(None).cast("string").alias("obj_lang"),
-            F.lit(False).alias("obj_is_literal"),
-            F.lit(None).cast("string").alias("src_url"),
-        ).distinct()
-
-        canon2 = F.broadcast(
-            canonical.select(
-                F.col("iri").alias("concept_iri"), "canonical_iri"
-            )
-        )
-        enriched = cascade_df.join(canon2, "concept_iri", "left").withColumn(
-            "canon", F.coalesce("canonical_iri", "concept_iri")
-        )
-        cui_triples = enriched.select(
-            F.col("canon").alias("subj"),
-            F.lit(UMLS_CUI).alias("pred"),
-            F.explode("cuis").alias("obj"),
-        )
-        tui_triples = enriched.select(
-            F.col("canon").alias("subj"),
-            F.lit(UMLS_TUI).alias("pred"),
-            F.explode("tuis").alias("obj"),
-        )
-        sty_triples = enriched.select(
-            F.col("canon").alias("subj"),
-            F.lit(UMLS_HAS_STY).alias("pred"),
-            F.explode("tuis").alias("tui"),
-        ).select("subj", "pred", sty_uri(F.col("tui")).alias("obj"))
-        literal_triples = (
-            cui_triples.unionByName(tui_triples)
-            .distinct()
-            .select(
-                "subj",
-                "pred",
-                "obj",
-                F.lit(None).cast("string").alias("obj_lang"),
-                F.lit(True).alias("obj_is_literal"),
+        def triple(subj, pred: str, obj, literal: bool, lang: str | None = None):
+            return F.struct(
+                subj.alias("subj"),
+                F.lit(pred).alias("pred"),
+                obj.alias("obj"),
+                F.lit(lang).cast("string").alias("obj_lang"),
+                F.lit(literal).alias("obj_is_literal"),
                 F.lit(None).cast("string").alias("src_url"),
             )
-        )
-        # hasSTY objects are RESOURCES (sty_uri builds an IRI; the
-        # reference's createResource at CUIOntologyDelegateImpl), so
-        # they are edges, not literals: they must reach the edges
-        # table's 'sty' partition (graph_sink._KIND) and serialize as
-        # <IRI>, not a quoted string.
-        sty_edge_triples = sty_triples.distinct().select(
-            "subj",
-            "pred",
-            "obj",
+
+        mention_triples = mentions.join(
+            canon, mentions.concept_iri == canon.iri, "left"
+        ).select(
+            F.col("url").alias("subj"),
+            F.lit(SIFR_MENTION).alias("pred"),
+            F.coalesce("canonical_iri", "concept_iri").alias("obj"),
             F.lit(None).cast("string").alias("obj_lang"),
             F.lit(False).alias("obj_is_literal"),
-            F.lit(None).cast("string").alias("src_url"),
+            F.col("url").alias("src_url"),
         )
-        literal_triples = literal_triples.unionByName(sty_edge_triples)
+
+        # every per-concept triple kind from ONE concept frame
+        # (cascade ⋈ canonical ⋈ has-notation flag), exploded once:
+        #  * rdf:type skos:Concept for every concept;
+        #  * umls:cui / umls:tui literals, and umls:hasSTY — its object
+        #    is a RESOURCE (sty_uri builds an IRI; the reference's
+        #    createResource at CUIOntologyDelegateImpl), so it must
+        #    reach the edges table's 'sty' partition (graph_sink._KIND)
+        #    and serialize as <IRI>, not a quoted string;
+        #  * E5 tail (updateCodeNotes, OntologyCUIProcessor.java:326-340):
+        #    the found code as skos:notation, only for classes that don't
+        #    already assert one (the SKOSNotationCodeFinder null check
+        #    :333-335);
+        #  * cuiAddedNotesToAdd (:150-156 + updateCUIs :311-314): a French
+        #    skos:changeNote on every class whose CUIs were ADDED by the
+        #    run — any non-own stage that produced CUIs, plus own-stage
+        #    classes the disambiguator rewrote (when -dc ran).
+        has_notation = (
+            ontology_labels.where(F.col("label_kind") == "notation")
+            .select("concept_iri", F.lit(True).alias("_has_notation"))
+            .distinct()
+        )
+        enriched = cascade_df.join(
+            canon, cascade_df.concept_iri == canon.iri, "left"
+        ).join(F.broadcast(has_notation), "concept_iri", "left")
+        subj = F.coalesce("canonical_iri", "concept_iri")
+        added = (F.col("cui_stage") != STAGE_OWN) & (F.size("cuis") > 0)
+        if "disambiguated" in cascade_df.columns:
+            added = added | ((F.col("cui_stage") == STAGE_OWN) & F.col("disambiguated"))
+        per_concept = F.concat(
+            F.array(
+                triple(subj, RDF_TYPE, F.lit(SKOS_CONCEPT), False),
+                F.when(
+                    F.col("code").isNotNull() & F.col("_has_notation").isNull(),
+                    triple(subj, SKOS_NOTATION, F.col("code"), True),
+                ),
+                F.when(
+                    added,
+                    triple(subj, SKOS_CHANGE_NOTE, F.lit(CUI_ADDED_NOTE), True, "fr"),
+                ),
+            ),
+            F.transform("cuis", lambda c: triple(subj, UMLS_CUI, c, True)),
+            F.transform("tuis", lambda t: triple(subj, UMLS_TUI, t, True)),
+            F.transform("tuis", lambda t: triple(subj, UMLS_HAS_STY, sty_uri(t), False)),
+        )
+        concept_triples = (
+            enriched.select(F.explode(per_concept).alias("t"))
+            .where(F.col("t").isNotNull())
+            .select("t.*")
+        )
 
         # north_star triple kinds: subClassOf edges from hierarchical
         # mappings (skos:broader/broadMatch → rdfs:subClassOf), both
         # endpoints canonicalized; self-loops created by canonical
         # merging are dropped.
-        from sifr_project_java_ontology_processing_spark.functions.uris import (
-            RDFS_SUBCLASSOF,
-            expand as _expand,
-        )
-
         hier = mappings.where(
-            F.col("property").isin(_expand("skos:broadMatch"), _expand("skos:broader"))
+            F.col("property").isin(expand("skos:broadMatch"), expand("skos:broader"))
         )
-        canon_src = F.broadcast(
-            canonical.select(F.col("iri").alias("source_iri"),
-                             F.col("canonical_iri").alias("_cs"))
-        )
-        canon_tgt = F.broadcast(
-            canonical.select(F.col("iri").alias("target_iri"),
-                             F.col("canonical_iri").alias("_ct"))
-        )
+        cs, ct = canon.alias("cs"), canon.alias("ct")
         subclass_triples = (
-            hier.join(canon_src, "source_iri", "left")
-            .join(canon_tgt, "target_iri", "left")
+            hier.join(cs, hier.source_iri == F.col("cs.iri"), "left")
+            .join(ct, hier.target_iri == F.col("ct.iri"), "left")
             .select(
-                F.coalesce("_cs", "source_iri").alias("subj"),
+                F.coalesce("cs.canonical_iri", "source_iri").alias("subj"),
                 F.lit(RDFS_SUBCLASSOF).alias("pred"),
-                F.coalesce("_ct", "target_iri").alias("obj"),
+                F.coalesce("ct.canonical_iri", "target_iri").alias("obj"),
                 F.lit(None).cast("string").alias("obj_lang"),
                 F.lit(False).alias("obj_is_literal"),
                 F.lit(None).cast("string").alias("src_url"),
             )
             .where(F.col("subj") != F.col("obj"))
-            .distinct()
         )
 
-        # E5 tail (updateCodeNotes, OntologyCUIProcessor.java:326-340):
-        # persist the found code as skos:notation — but only for classes
-        # that don't already assert one (the SKOSNotationCodeFinder null
-        # check :333-335).
-        has_notation = (
-            ontology_labels.where(F.col("label_kind") == "notation")
-            .select("concept_iri")
-            .distinct()
-        )
-        notation_triples = (
-            enriched.where(F.col("code").isNotNull())
-            .join(F.broadcast(has_notation), "concept_iri", "left_anti")
-            .select(
-                F.col("canon").alias("subj"),
-                F.lit(SKOS_NOTATION).alias("pred"),
-                F.col("code").alias("obj"),
-                F.lit(None).cast("string").alias("obj_lang"),
-                F.lit(True).alias("obj_is_literal"),
-                F.lit(None).cast("string").alias("src_url"),
-            )
-            .distinct()
-        )
-
-        # cuiAddedNotesToAdd (:150-156 + updateCUIs :311-314): a French
-        # skos:changeNote on every class whose CUIs were ADDED by the
-        # run — any non-own stage that produced CUIs, plus own-stage
-        # classes the disambiguator rewrote (when -dc ran).
-        added = (F.col("cui_stage") != STAGE_OWN) & (F.size("cuis") > 0)
-        if "disambiguated" in enriched.columns:
-            added = added | ((F.col("cui_stage") == STAGE_OWN) & F.col("disambiguated"))
-        note_triples = (
-            enriched.where(added)
-            .select(
-                F.col("canon").alias("subj"),
-                F.lit(SKOS_CHANGE_NOTE).alias("pred"),
-                F.lit(CUI_ADDED_NOTE).alias("obj"),
-                F.lit("fr").alias("obj_lang"),
-                F.lit(True).alias("obj_is_literal"),
-                F.lit(None).cast("string").alias("src_url"),
-            )
-            .distinct()
-        )
-
+        # predicates never overlap across the three branches, so one
+        # distinct over their union equals a distinct per branch
         return (
-            mention_triples.unionByName(type_triples)
+            mention_triples.unionByName(concept_triples)
             .unionByName(subclass_triples)
-            .unionByName(literal_triples)
-            .unionByName(notation_triples)
-            .unionByName(note_triples)
+            .distinct()
         )
 
     triples = stage("triples", _triples)
@@ -463,8 +413,9 @@ def run_kg_pipeline(
         return (
             M.partition_counts(extracted, run_id, "extracted")
             .unionByName(M.partition_counts(mentions, run_id, "mentions"))
-            .unionByName(M.counter_metrics(cascade_df, run_id, "cascade", "cui_stage"))
-            .unionByName(M.counter_metrics(cascade_df, run_id, "cascade", "tui_stage"))
+            .unionByName(
+                M.counter_metrics(cascade_df, run_id, "cascade", "cui_stage", "tui_stage")
+            )
             .unionByName(compare)
             .unionByName(M.partition_counts(triples, run_id, "triples", part_col="__none__"))
         )

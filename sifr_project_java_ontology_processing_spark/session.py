@@ -34,7 +34,8 @@ def _default_driver_mem(master: str) -> str:
     masters the driver only plans and collects; 8g stays right and
     executor sizing belongs to the cluster manager.
     """
-    m = re.fullmatch(r"local\[(\*|\d+)\](,\d+)?", master)
+    # local, local[N], local[*] and the retry form local[N,F] / local[*,F]
+    m = re.fullmatch(r"local\[(\*|\d+)(?:,\d+)?\]", master)
     if master != "local" and not m:
         return "8g"
     if m is None or m.group(1) == "*":
@@ -44,10 +45,9 @@ def _default_driver_mem(master: str) -> str:
     gb = max(8, math.ceil(threads * 0.75))
     try:
         phys_gib = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") / 2**30
-        gb = min(gb, max(8, int(phys_gib / 2)))
     except (ValueError, OSError, AttributeError):
-        gb = 8
-    return f"{gb}g"
+        return f"{gb}g"  # RAM unknown: keep the thread-scaled heap
+    return f"{min(gb, max(8, int(phys_gib / 2)))}g"
 
 
 def get_spark(

@@ -6,13 +6,14 @@ Here every pipeline stage materializes to a partitioned table keyed by
 ``run_id`` — rerunning the driver skips stages whose snapshot already
 committed (SURVEY.md §4.2 "Resume-from-checkpoint").
 
-Format: Iceberg when the runtime has it (real cluster), parquet-dir
-with an atomic ``_STAGE_COMMITTED`` marker otherwise (this sandbox has
-no Iceberg jars — the marker mimics a snapshot commit: readers only
-trust directories where the marker exists, so a killed mid-write stage
-is re-run, not half-read). Writes go through Spark's own job commit
-protocol (task temp → rename), so a marker is only laid down after a
-fully committed write.
+Format: a parquet directory per stage with an atomic
+``_STAGE_COMMITTED`` marker that mimics a table-format snapshot commit:
+readers only trust directories where the marker exists, so a killed
+mid-write stage is re-run, not half-read. Writes go through Spark's own
+job commit protocol (task temp → rename), so a marker is only laid down
+after a fully committed write. A freshly written stage is read back
+with the schema it was written with (no footer-inference job); a
+resumed stage infers it from the files.
 
 Filesystem access goes through the Hadoop FileSystem API, so the store
 works unchanged on file://, hdfs://, s3a://, etc. — not just the local
@@ -24,14 +25,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 _MARKER = "_STAGE_COMMITTED"
-
-
-def _has_iceberg(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")
-        return True
-    except Exception:
-        return False
 
 
 class StageStore:
@@ -79,6 +72,10 @@ class StageStore:
             out = self._fs.create(self._marker(stage), True)
             out.write(bytearray(self.run_id.encode("utf-8")))
             out.close()
+            if not partition_by:
+                # the written schema is known: skip the footer-inference
+                # job a schema-less read would run
+                return self.spark.read.schema(df.schema).parquet(path)
         return self.spark.read.parquet(path)
 
     def invalidate(self, stage: str) -> None:

@@ -1,21 +1,17 @@
-"""Streaming jobs: the map-only KG stages and windowed event aggs lifted
-to Structured Streaming.
+"""Streaming jobs: windowed event aggregation, exact dedup, curation
+and entailment lifted to Structured Streaming.
 
-Scale notes: extraction and mention detection are stateless
-``mapInPandas`` — identical code objects as the batch path (imported,
-not reimplemented), so batch/stream parity is by construction. The
-windowed aggregation keeps bounded state via watermarking; output mode
-``update`` for dashboards, ``append`` for exactly-once sinks after the
-watermark closes windows.
+Scale notes: the streaming twins reuse the batch operators' column
+logic (imported, not reimplemented), so batch/stream parity is by
+construction. The windowed aggregation keeps bounded state via
+watermarking; output mode ``update`` for dashboards, ``append`` for
+exactly-once sinks after the watermark closes windows.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from sifr_project_java_ontology_processing_spark.operators.extraction import extract_pages
-from sifr_project_java_ontology_processing_spark.operators.mentions import detect_mentions
 
 
 def streaming_events_hourly(
@@ -40,16 +36,6 @@ def streaming_events_hourly(
             "total_value",
         )
     )
-
-
-def streaming_mentions(
-    spark: SparkSession, pages_stream: DataFrame, ontology_labels: DataFrame
-) -> DataFrame:
-    """pages stream → extracted → mentions; stateless, so the batch
-    operators apply verbatim (the broadcast label trie is rebuilt per
-    micro-batch executor process exactly as in batch)."""
-    extracted = extract_pages(pages_stream)
-    return detect_mentions(spark, extracted, ontology_labels)
 
 
 def run_events_stream_demo(

@@ -17,18 +17,60 @@ from sifr_project_java_ontology_processing_spark.operators.canonicalize import (
 from .oracle import union_find_oracle as _uf_oracle
 
 
-def _check(spark, edges):
-    df = spark.createDataFrame(edges, "src string, dst string")
+def _check(spark, edges, thresholds=(200_000, 0), node_type="string"):
+    df = spark.createDataFrame(edges, f"src {node_type}, dst {node_type}")
     want = _uf_oracle(edges)
     want_nonroot = {k: v for k, v in want.items() if k != v}
     # both physical strategies must agree with the oracle:
     # driver union-find (small-graph fast path) and distributed stars
-    for threshold in (200_000, 0):
-        got = {
-            r["iri"]: r["canonical_iri"]
-            for r in connected_components(df, driver_threshold=threshold).collect()
-        }
+    for threshold in thresholds:
+        cc = connected_components(df, driver_threshold=threshold)
+        assert cc.schema.simpleString() == (
+            f"struct<iri:{node_type},canonical_iri:{node_type}>"
+        )
+        got = {r["iri"]: r["canonical_iri"] for r in cc.collect()}
         assert got == want_nonroot, (threshold, got, want_nonroot)
+
+
+def test_cc_driver_threshold_both_sides(spark, monkeypatch):
+    """|E| (distinct directed non-loop edges) at the threshold stays on
+    the driver; one edge over it, or threshold 0, goes distributed —
+    only the distributed path materializes the edge set."""
+    import sifr_project_java_ontology_processing_spark.operators.canonicalize as cz
+
+    edges = [("b", "a"), ("b", "c"), ("c", "d"), ("x", "y"), ("y", "x"),
+             ("b", "a"), ("q", "q")]  # a duplicate and a self-loop
+    n = 5
+    calls = []
+    real = cz.materialize_once
+    monkeypatch.setattr(cz, "materialize_once", lambda df: calls.append(1) or real(df))
+    for threshold, distributed in ((n, False), (n - 1, True), (0, True)):
+        calls.clear()
+        _check(spark, edges, thresholds=(threshold,))
+        assert bool(calls) == distributed, (threshold, len(calls))
+
+
+def test_cc_empty_edge_set(spark):
+    _check(spark, [], thresholds=(200_000, 1, 0))
+
+
+def test_cc_long_node_ids(spark):
+    edges = [(3, 1), (2, 3), (7, 8), (9, 8), (10, 10)]
+    _check(spark, edges, thresholds=(200_000, 3, 0), node_type="bigint")
+
+
+def test_canonical_mapping_small_path_broadcasts(spark):
+    mappings = spark.createDataFrame(
+        [("a", "eq", "b"), ("b", "eq", "c")],
+        "source_iri string, property string, target_iri string",
+    )
+    all_iris = spark.createDataFrame([("a",), ("b",), ("c",), ("z",)], "iri string")
+    got = canonical_mapping(mappings, ["eq"], all_iris)
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan, plan
+    assert sorted(map(tuple, got.collect())) == [
+        ("a", "a"), ("b", "a"), ("c", "a"), ("z", "z")
+    ]
 
 
 def test_cc_chain_cycle_singleton(spark):

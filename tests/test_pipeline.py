@@ -123,6 +123,35 @@ def test_pipeline_triples_match_golden_exactly(spark, kg_fixture, kg_tables):
     )
 
 
+# Spark jobs one cold StageStore build of the test fixture may run
+# (labels_sig through metrics): the dimension phase is per-concept
+# aggregates, a one-probe CC and a single-distinct triple assembly.
+STORE_BUILD_MAX_JOBS = 35
+
+
+def test_pipeline_store_path_matches_golden(spark, kg_fixture, kg_tables, tmp_path):
+    """The StageStore path (what ``cli kg`` runs) against the golden
+    triples, with a guard on the number of Spark jobs its cold build
+    submits."""
+    sc = spark.sparkContext
+    group = "kg_store_path_golden"
+    sc.setJobGroup(group, "cold StageStore build")
+    try:
+        result = _run(spark, kg_fixture, kg_tables,
+                      store=StageStore(spark, str(tmp_path), "g1"), run_id="g1")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    got = _triple_set(result.triples)
+    want = golden_triples(kg_fixture)
+    assert got == want, (
+        f"missing={list(want - got)[:3]} extra={list(got - want)[:3]}"
+    )
+    # a committed snapshot holds each triple once
+    assert result.triples.count() == len(got)
+    assert n_jobs <= STORE_BUILD_MAX_JOBS, n_jobs
+
+
 def test_pipeline_metrics_lineage(spark, kg_fixture, kg_tables):
     result = _run(spark, kg_fixture, kg_tables)
     rows = result.metrics.collect()

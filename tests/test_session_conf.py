@@ -37,9 +37,20 @@ def test_local_scales_with_thread_count():
     want = min(max(8, -(-(os.cpu_count() or 8) * 3 // 4)), cap)
     assert _gb(_default_driver_mem("local[*]")) == want
     assert _gb(_default_driver_mem("local")) == want
-    # retry-count suffix form
-    assert _gb(_default_driver_mem("local[4,2]")) == 8
+    # retry-count form local[N,F]: threads are N (local[4,2] would
+    # read 8 either way, so use a count above the 8g floor)
+    assert _gb(_default_driver_mem("local[32,2]")) == min(24, cap)
+    assert _gb(_default_driver_mem("local[*,3]")) == want
 
 
 def test_capped_at_half_physical_ram():
     assert _gb(_default_driver_mem("local[100000]")) == _phys_cap_gb()
+
+
+def test_unknown_ram_keeps_thread_scaled_heap(monkeypatch):
+    def _no_sysconf(name):
+        raise ValueError(name)
+
+    monkeypatch.setattr(os, "sysconf", _no_sysconf)
+    assert _default_driver_mem("local[32]") == "24g"
+    assert _default_driver_mem("local[4]") == "8g"
