@@ -229,27 +229,28 @@ def triples_to_edges(triples: DataFrame, *, preds: list[str] | None = None) -> D
 
 
 _CLOSURE_DRIVER_EDGE_MAX = 65_536  # edge count below which the closure
-# runs driver-side (the _schema_closure / connected_components hybrid
-# pattern: a ≤65k-edge relation is dimension-class — collecting it costs
-# the same as one broadcast, and the driver loop replaces the 2-jobs-
-# per-BFS-level frontier chain with one collect + one createDataFrame)
+# runs driver-side: a ≤65k-edge relation is dimension-class (a schema
+# hierarchy, a per-graph slice) — collecting it costs the same as one
+# broadcast, and the driver loop replaces the 2-jobs-per-BFS-level
+# frontier chain with one collect + one createDataFrame. Also the
+# rdf-list cell cap of inference._collect_rdf_lists.
 _CLOSURE_DRIVER_PAIR_MAX = 4_000_000  # output guard: a pathological
 # small graph (one long chain) has a quadratic closure; past this many
 # pairs the driver loop abandons its work and the distributed frontier
 # BFS (output-partitioned, spillable) takes over
 
 
-def _driver_transitive_closure(
-    rows, cap: int, max_depth: int | None
-) -> list[tuple] | None:
+def _driver_transitive_closure(rows, cap: int) -> tuple[list, bool] | None:
     """Driver-side twin of the frontier BFS: level-synchronous expansion
     with first-seen (= minimal) depth, cycle-safe via the pair set.
     Level 1 reproduces the distributed loop's exact output — the input
     rows with their MULTIPLICITY (the first level is a projection, not
     a distinct); deeper levels are deduplicated pairs, and a pair seen
     at any earlier level is never re-emitted (the anti-join). Returns
-    None when the pair count passes ``_CLOSURE_DRIVER_PAIR_MAX``
-    (caller falls back to the distributed loop)."""
+    ``(sorted rows, truncated)`` — truncated when level ``cap`` still
+    found new pairs — or None when the pair count passes
+    ``_CLOSURE_DRIVER_PAIR_MAX`` (caller falls back to the distributed
+    loop)."""
     adj: dict = {}
     seen: set = set()
     frontier = []
@@ -273,78 +274,15 @@ def _driver_transitive_closure(
             return None
         frontier = new
         depth += 1
-    if frontier and depth >= cap and max_depth is None:
-        raise ValueError(
-            "transitive_closure: no fixpoint in 1000 levels "
-            "(set max_depth for >1000-step diameters)"
-        )
-    return sorted(out)
+    return sorted(out), bool(frontier)
 
 
-def transitive_closure(
-    edges: DataFrame,
-    *,
-    src: str = "src",
-    dst: str = "dst",
-    max_depth: int | None = None,
-    partitions: int | None = None,
-    driver_threshold: int | None = None,
-) -> DataFrame:
-    """Reachability pairs (src, dst, depth) with BFS-minimal depth —
-    the SKOS ``broader+`` / ontology-ancestor expansion (the reference
-    hand-writes exactly the 2-hop case as chained joins,
-    OntologyCUIProcessor mapping stage / cascade J3; this is the
-    general fixed-point twin).
-
-    Hybrid: an edge set up to ``driver_threshold`` (default 65k, the
-    _schema_closure / connected_components bound; pass 0 to disable)
-    closes in a driver-side BFS loop — one collect + one
-    createDataFrame instead of 2 Spark jobs per level — with an
-    output-size guard (≈4M pairs) that falls back to the distributed
-    loop for pathological quadratic closures. Larger edge sets go
-    straight to the frontier BFS below.
-
-    Frontier BFS over iterative self-joins: each level joins the
-    previous frontier to the (cached, src-partitioned) edge relation,
-    anti-joins already-seen pairs (so diamonds don't re-expand and the
-    first-seen depth is the minimum), and eagerly localCheckpoints to
-    cut lineage — the CC/pagerank scale shape. Every level ends with
-    an O(1) isEmpty probe on the checkpointed frontier, so the loop
-    stops at the graph's ACTUAL closure depth even when ``max_depth``
-    is a generous upper bound (a depth-20 bound over a depth-3
-    hierarchy costs 3 levels, not 20). Cycles are safe: the anti-join
-    is on (src, dst) PAIRS, and a finite graph has a finite closure,
-    so the frontier always empties — ``max_depth`` only truncates,
-    and the 1000-level default cap raises (a graph with a >1000-step
-    diameter needs an explicit bound).
-    """
-    conf_part = int(
-        edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-    )
-    raw = edges.select(F.col(src).alias("_mid"), F.col(dst).alias("dst"))
-    cap0 = max_depth if max_depth is not None else 1000
-    thresh = (
-        _CLOSURE_DRIVER_EDGE_MAX if driver_threshold is None else driver_threshold
-    )
-    if thresh:
-        sample = raw.limit(thresh + 1).collect()
-        if len(sample) <= thresh:
-            closed = _driver_transitive_closure(sample, cap0, max_depth)
-            if closed is not None:
-                from pyspark.sql.types import (
-                    IntegerType,
-                    StructField,
-                    StructType,
-                )
-
-                schema = StructType(
-                    [
-                        StructField("src", raw.schema[0].dataType, True),
-                        StructField("dst", raw.schema[1].dataType, True),
-                        StructField("depth", IntegerType(), False),
-                    ]
-                )
-                return edges.sparkSession.createDataFrame(closed, schema)
+def _frontier_transitive_closure(
+    raw: DataFrame, cap: int, partitions: int | None
+) -> tuple[DataFrame, bool]:
+    """Distributed frontier BFS over ``(_mid, dst)`` edges, up to
+    ``cap`` levels. Returns ``(paths, truncated)`` — truncated when
+    level ``cap`` was reached with a non-empty frontier."""
     if partitions is not None:
         n_part = partitions
     else:
@@ -355,6 +293,9 @@ def transitive_closure(
         # EVERY level's every exchange. The count runs against a cache
         # the repartition then reuses. ~64k edges per partition floor;
         # big graphs keep the configured width.
+        conf_part = int(
+            raw.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
+        )
         raw = raw.persist()
         n_part = max(1, min(conf_part, raw.count() // 65536 + 1))
     e = raw.repartition(n_part, "_mid").persist()
@@ -363,13 +304,12 @@ def transitive_closure(
         .withColumn("depth", F.lit(1))
         .localCheckpoint(eager=True)
     )
-    if raw is not e and partitions is None:
+    if partitions is None:
         raw.unpersist()  # e is materialized by the level-1 checkpoint
     # `paths` stays a UNION of the eagerly-checkpointed per-level
     # frames (each leaf already materialized) — re-checkpointing the
     # accumulated union every level would rewrite O(levels²) rows.
     paths, frontier, depth = level, level, 1
-    cap = max_depth if max_depth is not None else 1000
     while depth < cap:
         nxt = (
             frontier.withColumnRenamed("dst", "_mid")
@@ -385,13 +325,79 @@ def transitive_closure(
         paths = paths.unionByName(nxt)
         frontier = nxt
         depth += 1
-    else:
-        if max_depth is None:
-            raise ValueError(
-                "transitive_closure: no fixpoint in 1000 levels "
-                "(set max_depth for >1000-step diameters)"
-            )
     e.unpersist()  # result is checkpointed; don't pin the edge cache
+    return paths, depth >= cap
+
+
+def transitive_closure(
+    edges: DataFrame,
+    *,
+    src: str = "src",
+    dst: str = "dst",
+    max_depth: int | None = None,
+    partitions: int | None = None,
+    driver_threshold: int | None = None,
+) -> DataFrame:
+    """Reachability pairs (src, dst, depth) with BFS-minimal depth —
+    the SKOS ``broader+`` / ontology-ancestor expansion (the reference
+    hand-writes exactly the 2-hop case as chained joins,
+    OntologyCUIProcessor mapping stage / cascade J3; this is the
+    general fixed-point twin). The one closure loop of the package:
+    ``inference._schema_closure`` (rdfs5/rdfs11) is a projection of it.
+
+    Hybrid: an edge set up to ``driver_threshold`` (default
+    ``_CLOSURE_DRIVER_EDGE_MAX`` = 65,536; pass 0 to disable) closes
+    in a driver-side BFS loop — one collect + one createDataFrame
+    instead of 2 Spark jobs per level — with an output-size guard
+    (``_CLOSURE_DRIVER_PAIR_MAX`` = 4M pairs) that falls back to the
+    distributed loop for pathological quadratic closures. Larger edge
+    sets go straight to the frontier BFS below.
+
+    Frontier BFS over iterative self-joins: each level joins the
+    previous frontier to the (cached, src-partitioned) edge relation,
+    anti-joins already-seen pairs (so diamonds don't re-expand and the
+    first-seen depth is the minimum), and eagerly localCheckpoints to
+    cut lineage — the CC/pagerank scale shape. Every level ends with
+    an O(1) isEmpty probe on the checkpointed frontier, so the loop
+    stops at the graph's ACTUAL closure depth even when ``max_depth``
+    is a generous upper bound (a depth-20 bound over a depth-3
+    hierarchy costs 3 levels, not 20). Cycles are safe: the anti-join
+    is on (src, dst) PAIRS, and a finite graph has a finite closure,
+    so the frontier always empties — ``max_depth`` only truncates,
+    and the 1000-level default cap raises (a graph with a >1000-step
+    diameter needs an explicit bound). Either path emits a distinct
+    input's pairs once each: level 1 is the input itself, deeper
+    levels are deduplicated and anti-joined against earlier ones.
+    """
+    raw = edges.select(F.col(src).alias("_mid"), F.col(dst).alias("dst"))
+    cap = max_depth if max_depth is not None else 1000
+    thresh = (
+        _CLOSURE_DRIVER_EDGE_MAX if driver_threshold is None else driver_threshold
+    )
+    closed = None
+    if thresh:
+        sample = raw.limit(thresh + 1).collect()
+        if len(sample) <= thresh:
+            closed = _driver_transitive_closure(sample, cap)
+    if closed is None:
+        paths, truncated = _frontier_transitive_closure(raw, cap, partitions)
+    else:
+        rows, truncated = closed
+        from pyspark.sql.types import IntegerType, StructField, StructType
+
+        schema = StructType(
+            [
+                StructField("src", raw.schema[0].dataType, True),
+                StructField("dst", raw.schema[1].dataType, True),
+                StructField("depth", IntegerType(), False),
+            ]
+        )
+        paths = edges.sparkSession.createDataFrame(rows, schema)
+    if truncated and max_depth is None:
+        raise ValueError(
+            "transitive_closure: no fixpoint in 1000 levels "
+            "(set max_depth for >1000-step diameters)"
+        )
     return paths
 
 

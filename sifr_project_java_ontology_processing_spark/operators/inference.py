@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.uris import expand
-from .graph import transitive_closure
+from .graph import _CLOSURE_DRIVER_EDGE_MAX, transitive_closure
 
 RDF_TYPE = expand("rdf:type")
 RDFS_SUBCLASSOF = expand("rdfs:subClassOf")
@@ -66,57 +66,21 @@ def _as_type_triple(subj_col, cls_col) -> list:
     ]
 
 
-_DRIVER_CLOSURE_MAX = 65_536  # schema edge count below which the
-# closure runs driver-side (same hybrid pattern as
-# canonicalize.connected_components' driver_threshold: a schema is a
-# DIMENSION — collecting it is the same cost class as broadcasting it,
-# and the driver loop replaces ~4 Spark jobs per BFS level)
-
-
 def _schema_closure(triples: DataFrame, pred_iri: str, *, max_depth: int) -> DataFrame:
     """Transitive closure of one schema predicate as (sub, sup) pairs
-    (closure depth collapsed — consumers only need reachability).
-
-    Hybrid: schemas up to ``_DRIVER_CLOSURE_MAX`` edges close in a
-    driver-side frontier loop (output-bounded: each round extends the
-    known pair set by one hop, cycle-safe); a pathological larger
-    ontology falls back to the distributed frontier BFS."""
+    (closure depth collapsed — consumers only need reachability): a
+    projection of ``graph.transitive_closure``, whose driver/distributed
+    hybrid closes a schema-sized hierarchy in one driver loop. The
+    edges are distinct, so each pair comes out once; derived
+    self-pairs stay (a cycle A ⊑ B ⊑ A entails A ⊑ A)."""
     edges = (
         triples.where((F.col("pred") == pred_iri) & ~F.col("obj_is_literal"))
         .select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
         .where(F.col("src") != F.col("dst"))
         .distinct()
     )
-    sample = edges.limit(_DRIVER_CLOSURE_MAX + 1).collect()
-    if len(sample) <= _DRIVER_CLOSURE_MAX:
-        adj: dict[str, list[str]] = {}
-        for r in sample:
-            adj.setdefault(r["src"], []).append(r["dst"])
-        paths: set[tuple[str, str]] = {(r["src"], r["dst"]) for r in sample}
-        frontier = set(paths)
-        for _ in range(1, max_depth):
-            # derived self-pairs (a, a) stay: a subClassOf cycle
-            # A ⊑ B ⊑ A entails A ⊑ A, matching the distributed twin
-            new = {
-                (a, c)
-                for a, b in frontier
-                for c in adj.get(b, ())
-                if (a, c) not in paths
-            }
-            if not new:
-                break
-            paths |= new
-            frontier = new
-        spark = triples.sparkSession
-        if not paths:
-            return spark.createDataFrame([], "_sub string, _sup string")
-        return spark.createDataFrame(
-            sorted(paths), "_sub string, _sup string"
-        )
     closed = transitive_closure(edges, max_depth=max_depth, partitions=8)
-    return closed.select(
-        F.col("src").alias("_sub"), F.col("dst").alias("_sup")
-    ).distinct()
+    return closed.select(F.col("src").alias("_sub"), F.col("dst").alias("_sup"))
 
 
 def rdfs_entail(
@@ -698,6 +662,36 @@ def apply_rules_to_delta(
     return n2.unionByName(d9)
 
 
+def _schema_in_delta(d: DataFrame, sp: DataFrame, *extra_preds: str) -> bool:
+    """True when the delta carries schema: a triple whose predicate IS a
+    schema predicate (``_SCHEMA_PREDS`` plus ``extra_preds``), types a
+    property characteristic, OR is a declared SUBPROPERTY of a schema
+    predicate / rdf:type in the old graph (rdfs7 would derive schema
+    triples from it — e.g. ex:q ⊑ rdfs:subClassOf — which the
+    saturated-schema shortcut cannot see). Two probes of the small
+    delta; ``sp`` is the saturated subPropertyOf view."""
+    preds = (*_SCHEMA_PREDS, *extra_preds)
+    meta_preds = sp.where(
+        F.col("_sup").isin(*preds) | (F.col("_sup") == RDF_TYPE)
+    ).select("_sub")
+    return not d.where(
+        F.col("pred").isin(*preds)
+        | ((F.col("pred") == RDF_TYPE) & F.col("obj").isin(*_SCHEMA_TYPES))
+    ).isEmpty() or not d.join(
+        F.broadcast(meta_preds), d["pred"] == meta_preds["_sub"], "left_semi"
+    ).isEmpty()
+
+
+def _append_new(e: DataFrame, fresh: DataFrame) -> DataFrame:
+    """Null-safe anti-join: append to ``e`` only the triples of
+    ``fresh`` it does not already hold."""
+    cond = None
+    for c in _TRIPLE_COLS:
+        eq = fresh[c].eqNullSafe(e[c])
+        cond = eq if cond is None else (cond & eq)
+    return e.unionByName(fresh.join(e, cond, "left_anti"))
+
+
 def rdfs_entail_delta(
     entailed: DataFrame,
     delta: DataFrame,
@@ -748,21 +742,7 @@ def rdfs_entail_delta(
         .localCheckpoint(eager=True)
     )
     sp, sc, dom, rng = saturated_schema_views(e_schema)
-    # a delta triple is schema-bearing if its predicate IS a schema
-    # predicate, types a property characteristic, OR is a declared
-    # SUBPROPERTY of a schema predicate / rdf:type in the old graph
-    # (rdfs7 would derive schema triples from it — e.g. ex:q ⊑
-    # rdfs:subClassOf — which the saturated-schema shortcut cannot see)
-    meta_preds = sp.where(
-        F.col("_sup").isin(*_SCHEMA_PREDS) | (F.col("_sup") == RDF_TYPE)
-    ).select("_sub")
-    schema_in_delta = not d.where(
-        F.col("pred").isin(*_SCHEMA_PREDS)
-        | ((F.col("pred") == RDF_TYPE) & F.col("obj").isin(*_SCHEMA_TYPES))
-    ).isEmpty() or not d.join(
-        F.broadcast(meta_preds), d["pred"] == meta_preds["_sub"], "left_semi"
-    ).isEmpty()
-    if schema_in_delta:
+    if _schema_in_delta(d, sp):
         return rdfs_entail(e.unionByName(d), max_schema_depth=max_schema_depth)
     # lazy checkpoint before the rules: apply_rules_to_delta's union
     # tree references its input ~12× (see rdfs_plus_entail_delta) —
@@ -770,13 +750,7 @@ def rdfs_entail_delta(
     # delta plan
     d = d.localCheckpoint(eager=False)
     fresh = apply_rules_to_delta(d, sp, sc, dom, rng).distinct()
-
-    # null-safe anti-join: keep only genuinely new triples, then append
-    cond = None
-    for c in _TRIPLE_COLS:
-        eq = fresh[c].eqNullSafe(e[c])
-        cond = eq if cond is None else (cond & eq)
-    return e.unionByName(fresh.join(e, cond, "left_anti"))
+    return _append_new(e, fresh)
 
 
 def rdfs_plus_entail_delta(
@@ -856,17 +830,7 @@ def rdfs_plus_entail_delta(
         .localCheckpoint(eager=True)
     )
     sp, sc, dom, rng = saturated_schema_views(e_schema)
-    meta_preds = sp.where(
-        F.col("_sup").isin(*_SCHEMA_PREDS, OWL_EQCLASS, OWL_EQPROP)
-        | (F.col("_sup") == RDF_TYPE)
-    ).select("_sub")
-    schema_in_delta = not d.where(
-        F.col("pred").isin(*_SCHEMA_PREDS, OWL_EQCLASS, OWL_EQPROP)
-        | ((F.col("pred") == RDF_TYPE) & F.col("obj").isin(*_SCHEMA_TYPES))
-    ).isEmpty() or not d.join(
-        F.broadcast(meta_preds), d["pred"] == meta_preds["_sub"], "left_semi"
-    ).isEmpty()
-    if schema_in_delta:
+    if _schema_in_delta(d, sp, OWL_EQCLASS, OWL_EQPROP):
         return rdfs_plus_entail(
             e.unionByName(d),
             max_schema_depth=max_schema_depth,
@@ -977,12 +941,7 @@ def rdfs_plus_entail_delta(
         n2.unionByName(derived_trans), inv_both, sym
     ).localCheckpoint(eager=False)
     fresh = apply_rules_to_delta(n3, sp, sc, dom, rng).distinct()
-
-    cond = None
-    for c in _TRIPLE_COLS:
-        eq = fresh[c].eqNullSafe(e[c])
-        cond = eq if cond is None else (cond & eq)
-    return e.unionByName(fresh.join(e, cond, "left_anti"))
+    return _append_new(e, fresh)
 
 
 OWL_FUNCTIONAL = "http://www.w3.org/2002/07/owl#FunctionalProperty"
@@ -1064,11 +1023,11 @@ def _collect_rdf_lists(
     ``(s, [(obj, lang, is_lit), ...])`` — the RDF list
     (rdf:first/rdf:rest chains, which both the Turtle ``( )`` and
     RDF/XML parseType=Collection readers emit) is walked DRIVER-side:
-    axioms are a schema dimension (same stance as _schema_closure's
+    axioms are a schema dimension (same stance as transitive_closure's
     driver path). Malformed lists (missing first/rest, FORKED nodes
     with duplicate first/rest arcs, cycles) raise rather than silently
     shortening or nondeterministically reordering members. The
-    list-cell collect is capped at ``_DRIVER_CLOSURE_MAX`` rows: a
+    list-cell collect is capped at ``_CLOSURE_DRIVER_EDGE_MAX`` rows: a
     graph whose INSTANCE data carries millions of RDF collections
     (OWL class expressions, SKOS ordered collections) must pass the
     axioms explicitly rather than OOM the driver. ``rdf:first``
@@ -1086,12 +1045,12 @@ def _collect_rdf_lists(
             | ((F.col("pred") == _RDF_REST) & ~F.col("obj_is_literal"))
         )
         .select("subj", "pred", "obj", "obj_lang", "obj_is_literal")
-        .limit(_DRIVER_CLOSURE_MAX + 1)
+        .limit(_CLOSURE_DRIVER_EDGE_MAX + 1)
         .collect()
     )
-    if len(cell_rows) > _DRIVER_CLOSURE_MAX:
+    if len(cell_rows) > _CLOSURE_DRIVER_EDGE_MAX:
         raise ValueError(
-            f"graph carries > {_DRIVER_CLOSURE_MAX} rdf:first/rdf:rest "
+            f"graph carries > {_CLOSURE_DRIVER_EDGE_MAX} rdf:first/rdf:rest "
             f"cells — extract the {label} axioms from the schema graph "
             "and pass them explicitly instead of walking instance-data "
             "collections driver-side"

@@ -239,6 +239,11 @@ def test_bgp_unbound_select_var_raises(tiny_triples):
 # ---------------------------------------------------------------------------
 
 
+# driver_threshold=None: the default driver BFS; 0: the distributed
+# frontier loop. Each closure test runs both sides of the hybrid.
+_CLOSURE_PATHS = (None, 0)
+
+
 def test_transitive_closure_chain_and_diamond(spark):
     from sifr_project_java_ontology_processing_spark.operators.graph import (
         transitive_closure,
@@ -249,14 +254,17 @@ def test_transitive_closure_chain_and_diamond(spark):
         [("a", "b"), ("b", "c"), ("c", "d"), ("x", "l"), ("x", "r"), ("l", "y"), ("r", "y")],
         "src string, dst string",
     )
-    got = {(r["src"], r["dst"]): r["depth"] for r in transitive_closure(edges).collect()}
-    assert got[("a", "b")] == 1 and got[("a", "c")] == 2 and got[("a", "d")] == 3
-    assert got[("b", "d")] == 2 and got[("c", "d")] == 1
-    # diamond: (x,y) appears ONCE with min depth 2
-    assert got[("x", "y")] == 2
-    assert len([k for k in got if k[0] == "x"]) == 3  # l, r, y
-    # chain: 6 pairs; diamond: x->{l,r,y}, l->y, r->y = 5 pairs
-    assert len(got) == 11
+    for threshold in _CLOSURE_PATHS:
+        rows = transitive_closure(edges, driver_threshold=threshold).collect()
+        got = {(r["src"], r["dst"]): r["depth"] for r in rows}
+        assert len(rows) == len(got)  # every pair exactly once
+        assert got[("a", "b")] == 1 and got[("a", "c")] == 2 and got[("a", "d")] == 3
+        assert got[("b", "d")] == 2 and got[("c", "d")] == 1
+        # diamond: (x,y) appears ONCE with min depth 2
+        assert got[("x", "y")] == 2
+        assert len([k for k in got if k[0] == "x"]) == 3  # l, r, y
+        # chain: 6 pairs; diamond: x->{l,r,y}, l->y, r->y = 5 pairs
+        assert len(got) == 11
 
 
 def test_transitive_closure_depth_bound_and_cycle_guard(spark):
@@ -267,14 +275,82 @@ def test_transitive_closure_depth_bound_and_cycle_guard(spark):
     chain = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "d")], "src string, dst string"
     )
-    bounded = transitive_closure(chain, max_depth=2)
-    assert {(r["src"], r["dst"], r["depth"]) for r in bounded.collect()} == {
-        ("a", "b", 1), ("b", "c", 1), ("c", "d", 1), ("a", "c", 2), ("b", "d", 2),
-    }
-    # cycle with fixpoint mode terminates (reachability saturates)
     cyc = spark.createDataFrame([("a", "b"), ("b", "a")], "src string, dst string")
-    got = {(r["src"], r["dst"]): r["depth"] for r in transitive_closure(cyc).collect()}
-    assert got == {("a", "b"): 1, ("b", "a"): 1, ("a", "a"): 2, ("b", "b"): 2}
+    for threshold in _CLOSURE_PATHS:
+        bounded = transitive_closure(chain, max_depth=2, driver_threshold=threshold)
+        assert {(r["src"], r["dst"], r["depth"]) for r in bounded.collect()} == {
+            ("a", "b", 1), ("b", "c", 1), ("c", "d", 1), ("a", "c", 2), ("b", "d", 2),
+        }
+        # cycle with fixpoint mode terminates (reachability saturates)
+        got = {
+            (r["src"], r["dst"]): r["depth"]
+            for r in transitive_closure(cyc, driver_threshold=threshold).collect()
+        }
+        assert got == {("a", "b"): 1, ("b", "a"): 1, ("a", "a"): 2, ("b", "b"): 2}
+
+
+def _closure_spy(monkeypatch):
+    """Record which loop each transitive_closure call runs."""
+    from sifr_project_java_ontology_processing_spark.operators import graph
+
+    paths = []
+    real_driver = graph._driver_transitive_closure
+    real_frontier = graph._frontier_transitive_closure
+
+    def driver(*a):
+        paths.append("driver")
+        return real_driver(*a)
+
+    def frontier(*a):
+        paths.append("distributed")
+        return real_frontier(*a)
+
+    monkeypatch.setattr(graph, "_driver_transitive_closure", driver)
+    monkeypatch.setattr(graph, "_frontier_transitive_closure", frontier)
+    return paths
+
+
+# chain + diamond + cycle + a duplicated edge (level 1 keeps multiplicity)
+_CLOSURE_EDGES = [
+    ("a", "b"), ("b", "c"), ("c", "d"), ("x", "l"), ("x", "r"), ("l", "y"),
+    ("r", "y"), ("p", "q"), ("q", "p"), ("a", "b"),
+]
+
+
+def _closure_rows(df):
+    return sorted((r["src"], r["dst"], r["depth"]) for r in df.collect())
+
+
+def test_transitive_closure_threshold_boundary(spark, monkeypatch):
+    """|E| edges stay on the driver; a threshold of |E|−1 goes
+    distributed — with the same (src, dst, depth) multiset."""
+    from sifr_project_java_ontology_processing_spark.operators.graph import (
+        transitive_closure,
+    )
+
+    edges = spark.createDataFrame(_CLOSURE_EDGES, "src string, dst string")
+    n = len(_CLOSURE_EDGES)
+    paths = _closure_spy(monkeypatch)
+    on_driver = _closure_rows(transitive_closure(edges, driver_threshold=n))
+    assert paths == ["driver"]
+    distributed = _closure_rows(transitive_closure(edges, driver_threshold=n - 1))
+    assert paths == ["driver", "distributed"]
+    assert on_driver == distributed
+    assert on_driver.count(("a", "b", 1)) == 2  # input multiplicity kept
+    assert ("p", "p", 2) in on_driver and ("a", "d", 3) in on_driver
+
+
+def test_transitive_closure_pair_guard_falls_back(spark, monkeypatch):
+    """Past _CLOSURE_DRIVER_PAIR_MAX pairs the driver loop gives up and
+    the distributed loop produces the same rows."""
+    from sifr_project_java_ontology_processing_spark.operators import graph
+
+    edges = spark.createDataFrame(_CLOSURE_EDGES, "src string, dst string")
+    expected = _closure_rows(graph.transitive_closure(edges))
+    monkeypatch.setattr(graph, "_CLOSURE_DRIVER_PAIR_MAX", 5)
+    paths = _closure_spy(monkeypatch)
+    assert _closure_rows(graph.transitive_closure(edges)) == expected
+    assert paths == ["driver", "distributed"]
 
 
 # ---------------------------------------------------------------------------

@@ -25,19 +25,22 @@ def _triples(spark, rows):
     return spark.createDataFrame(rows, SCHEMA)
 
 
+_RDFS_ASSERTED = [
+    _iri("p1", RDFS_SUBPROPERTYOF, "p2"),
+    _iri("p2", RDFS_SUBPROPERTYOF, "p3"),
+    _iri("A", RDFS_SUBCLASSOF, "B"),
+    _iri("B", RDFS_SUBCLASSOF, "C"),
+    _iri("p1", RDFS_DOMAIN, "D1"),
+    _iri("p2", RDFS_RANGE, "R2"),
+    _iri("x", "p1", "y"),
+    _iri("u", RDF_TYPE, "A"),
+]
+
+
 def test_rdfs_entail_full_rule_set(spark):
     """Chain hierarchy + domain/range; every rule fires, including
     rdfs3 on an rdfs7-DERIVED assertion (stratification order)."""
-    asserted = [
-        _iri("p1", RDFS_SUBPROPERTYOF, "p2"),
-        _iri("p2", RDFS_SUBPROPERTYOF, "p3"),
-        _iri("A", RDFS_SUBCLASSOF, "B"),
-        _iri("B", RDFS_SUBCLASSOF, "C"),
-        _iri("p1", RDFS_DOMAIN, "D1"),
-        _iri("p2", RDFS_RANGE, "R2"),
-        _iri("x", "p1", "y"),
-        _iri("u", RDF_TYPE, "A"),
-    ]
+    asserted = _RDFS_ASSERTED
     expected = set(asserted) | {
         _iri("p1", RDFS_SUBPROPERTYOF, "p3"),  # rdfs5
         _iri("x", "p2", "y"),  # rdfs7
@@ -1247,3 +1250,85 @@ def test_consistency_violations_clean_graph_empty(spark):
     assert (
         consistency_violations(spark.createDataFrame(rows, SCHEMA)).count() == 0
     )
+
+
+# ---------------------------------------------------------------------------
+# Schema closure on both sides of the transitive_closure hybrid
+# ---------------------------------------------------------------------------
+
+# a subClassOf cycle (K1 ⊑ K2 ⊑ K1 ⇒ K1 ⊑ K1), a diamond reaching T
+# twice, and a duplicated axiom
+_SCHEMA_SHAPES = [
+    _iri("K1", RDFS_SUBCLASSOF, "K2"),
+    _iri("K2", RDFS_SUBCLASSOF, "K1"),
+    _iri("k", RDF_TYPE, "K2"),
+    _iri("D", RDFS_SUBCLASSOF, "L"),
+    _iri("D", RDFS_SUBCLASSOF, "R"),
+    _iri("D", RDFS_SUBCLASSOF, "L"),
+    _iri("L", RDFS_SUBCLASSOF, "T"),
+    _iri("R", RDFS_SUBCLASSOF, "T"),
+]
+
+
+def test_schema_closure_driver_and_distributed_agree(spark, monkeypatch):
+    """rdfs_entail / rdfs_plus_entail give the same rows when every
+    closure is forced onto the distributed frontier loop, and the
+    subClassOf closure holds each (_sub, _sup) pair once on both paths
+    (so it needs no trailing distinct)."""
+    from sifr_project_java_ontology_processing_spark.operators import graph, inference
+
+    schema, base, delta = _plus_fixture(spark)
+    cases = [
+        (inference.rdfs_entail, _RDFS_ASSERTED + _SCHEMA_SHAPES),
+        (inference.rdfs_plus_entail, schema + base + delta + _SCHEMA_SHAPES),
+    ]
+
+    def entailed():
+        return [
+            sorted(tuple(r) for r in entail(_triples(spark, rows)).collect())
+            for entail, rows in cases
+        ]
+
+    def sc_pairs():
+        sc = inference._schema_closure(
+            _triples(spark, _RDFS_ASSERTED + _SCHEMA_SHAPES),
+            RDFS_SUBCLASSOF,
+            max_depth=20,
+        )
+        return [(r["_sub"], r["_sup"]) for r in sc.collect()]
+
+    on_driver, driver_sc = entailed(), sc_pairs()
+
+    def _no_driver(*a):
+        raise AssertionError("driver closure ran with the threshold at 0")
+
+    monkeypatch.setattr(graph, "_CLOSURE_DRIVER_EDGE_MAX", 0)
+    monkeypatch.setattr(graph, "_driver_transitive_closure", _no_driver)
+    assert entailed() == on_driver
+    distributed_sc = sc_pairs()
+
+    for pairs in (driver_sc, distributed_sc):
+        assert len(pairs) == len(set(pairs))
+    assert sorted(driver_sc) == sorted(distributed_sc)
+    assert {("K1", "K1"), ("K2", "K2"), ("D", "T"), ("A", "C")} <= set(driver_sc)
+    rdfs_rows = on_driver[0]
+    assert _iri("K1", RDFS_SUBCLASSOF, "K1") in rdfs_rows
+    assert _iri("k", RDF_TYPE, "K1") in rdfs_rows
+
+
+def test_rdf_list_cell_cap_raises(spark, monkeypatch):
+    """_collect_rdf_lists refuses to walk more rdf:first/rdf:rest cells
+    than the driver bound instead of collecting them all."""
+    import pytest as _pytest
+
+    from sifr_project_java_ontology_processing_spark.operators import inference
+
+    rows = [_iri("p:g", inference.OWL_PROPERTY_CHAIN, "_:c0")] + _rdf_list(
+        "_:c", [("p:p", None, False), ("p:q", None, False)]
+    )
+    df = _triples(spark, rows)
+    monkeypatch.setattr(inference, "_CLOSURE_DRIVER_EDGE_MAX", 4)  # = cells
+    assert inference.extract_property_chains(df) == [("p:g", ["p:p", "p:q"])]
+    monkeypatch.setattr(inference, "_CLOSURE_DRIVER_EDGE_MAX", 2)
+    with _pytest.raises(ValueError, match="> 2 rdf:first/rdf:rest cells"):
+        inference.extract_property_chains(df)
