@@ -37,11 +37,26 @@ stratified-materialization assumption; a ``rdfs:domain`` triple about
 ``rdf:type`` would need another round — such graphs are rejected
 nowhere but simply entailed one stratum deep, as in every production
 materializer).
+
+Every stratum frame with more than one consumer is lazily
+checkpointed, so it evaluates once.
+
+The same module carries RDFS-Plus, incremental maintenance of both,
+and the OWL RL restriction / class-expression / consistency tiers.
+They share one copy of each rule building block: ``_iri_triple`` (the
+select list of a derived IRI-object, NULL-lang triple), ``_rdfs7``,
+``_property_dims`` (inverse / symmetric / transitive dimensions),
+``_pooled_edges`` / ``_unpool`` (the predicate-fused transitive
+edges), ``_novel`` (the null-safe set difference that ``_append_new``
+and the fixpoints use) and ``_seminaive`` (the round loop of the
+restriction and class-expression fixpoints).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.uris import expand
@@ -56,14 +71,93 @@ RDFS_RANGE = expand("rdfs:range")
 _TRIPLE_COLS = ["subj", "pred", "obj", "obj_lang", "obj_is_literal"]
 
 
-def _as_type_triple(subj_col, cls_col) -> list:
+def _iri_triple(subj: "Column | str", pred: "Column | str", obj: "Column | str") -> list:
+    """Select list of a derived IRI-object triple (NULL lang, not a
+    literal); string arguments name columns."""
+    subj, pred, obj = (F.col(c) if isinstance(c, str) else c for c in (subj, pred, obj))
     return [
-        subj_col.alias("subj"),
-        F.lit(RDF_TYPE).alias("pred"),
-        cls_col.alias("obj"),
+        subj.alias("subj"),
+        pred.alias("pred"),
+        obj.alias("obj"),
         F.lit(None).cast("string").alias("obj_lang"),
         F.lit(False).alias("obj_is_literal"),
     ]
+
+
+def _as_type_triple(subj_col: "Column | str", cls_col: "Column | str") -> list:
+    return _iri_triple(subj_col, F.lit(RDF_TYPE), cls_col)
+
+
+def _types_of(g: DataFrame) -> DataFrame:
+    """The IRI-object ``rdf:type`` slice of a fact frame."""
+    return g.where((F.col("pred") == RDF_TYPE) & ~F.col("obj_is_literal"))
+
+
+def _declared_props(t: DataFrame, type_iri: str) -> DataFrame:
+    """Properties typed ``type_iri`` as a one-column ``_p`` dimension."""
+    return (
+        t.where((F.col("pred") == RDF_TYPE) & (F.col("obj") == type_iri))
+        .select(F.col("subj").alias("_p"))
+        .distinct()
+    )
+
+
+def _rdfs7(g: DataFrame, sp: DataFrame) -> DataFrame:
+    """rdfs7 over ``g`` against a broadcast (_sub, _sup) subPropertyOf
+    closure. The object TERM is copied verbatim, lang tag included
+    ("Hello"@en under Q is still "Hello"@en, not "Hello")."""
+    return g.join(F.broadcast(sp), g["pred"] == sp["_sub"]).select(
+        "subj", F.col("_sup").alias("pred"), "obj", "obj_lang", "obj_is_literal"
+    )
+
+
+def _union_all(frames: list[DataFrame]) -> DataFrame:
+    return reduce(DataFrame.unionByName, frames)
+
+
+def _novel(fresh: DataFrame, e: DataFrame) -> DataFrame:
+    """The triples of ``fresh`` that ``e`` does not hold, by null-safe
+    full-term identity: a plain multi-column anti-join would keep every
+    NULL-lang row (NULL = NULL is not true), and NULL and ``''`` stay
+    different tags."""
+    cond = reduce(
+        lambda a, b: a & b, [fresh[c].eqNullSafe(e[c]) for c in _TRIPLE_COLS]
+    )
+    return fresh.join(e, cond, "left_anti")
+
+
+def _append_new(e: DataFrame, fresh: DataFrame) -> DataFrame:
+    """Append to ``e`` only the triples of ``fresh`` it does not already
+    hold."""
+    return e.unionByName(_novel(fresh, e))
+
+
+def _seminaive(facts: DataFrame, derive, max_rounds: int, name: str) -> DataFrame:
+    """Semi-naive fixpoint of ``derive(delta, facts)`` — a list of
+    derived triple frames, empty when no rule applies. ``facts`` comes
+    in eagerly checkpointed and is the first round's delta. Each round
+    dedups the derivations, keeps the rows ``facts`` does not hold
+    (``_novel``), checkpoints them, stops when none are new, and
+    otherwise unions them in as the next delta: a union of
+    eagerly-checkpointed leaves, so re-reads are cheap and the
+    accumulated graph is never re-copied per round (the
+    transitive_closure pattern). Raises when ``max_rounds`` rounds all
+    found something new."""
+    delta = facts
+    for _ in range(max_rounds):
+        derived = derive(delta, facts)
+        if not derived:
+            break
+        new = _novel(_union_all(derived).distinct(), facts).localCheckpoint(
+            eager=True
+        )
+        if new.isEmpty():
+            break
+        facts = facts.unionByName(new)
+        delta = new
+    else:
+        raise ValueError(f"{name}: no fixpoint within {max_rounds} rounds")
+    return facts
 
 
 def _schema_closure(triples: DataFrame, pred_iri: str, *, max_depth: int) -> DataFrame:
@@ -87,7 +181,6 @@ def rdfs_entail(
     triples: DataFrame,
     *,
     max_schema_depth: int = 20,
-    materialize_strata: bool = True,
     _sp: DataFrame | None = None,
 ) -> DataFrame:
     """Materialize the RDFS consequences of ``triples`` and return the
@@ -107,45 +200,21 @@ def rdfs_entail(
     """
     t = triples.select(*_TRIPLE_COLS)
 
-    def _schema_triples(closed: DataFrame, pred_iri: str) -> DataFrame:
-        # rdfs5/rdfs11 also ENTAIL the closed schema pairs as triples
-        return closed.select(
-            F.col("_sub").alias("subj"),
-            F.lit(pred_iri).alias("pred"),
-            F.col("_sup").alias("obj"),
-            F.lit(None).cast("string").alias("obj_lang"),
-            F.lit(False).alias("obj_is_literal"),
-        )
-
     # --- stratum 1: property hierarchy (rdfs5 closure + rdfs7) -----------
     sp = (
         _sp
         if _sp is not None
         else _schema_closure(t, RDFS_SUBPROPERTYOF, max_depth=max_schema_depth)
     )
-    derived7 = (
-        t.join(F.broadcast(sp), t["pred"] == sp["_sub"])
-        .select(
-            F.col("subj"),
-            F.col("_sup").alias("pred"),
-            F.col("obj"),
-            # the object TERM is copied verbatim — lang tag included
-            # ("Hello"@en under Q is still "Hello"@en, not "Hello")
-            F.col("obj_lang"),
-            F.col("obj_is_literal"),
-        )
+    # rdfs5/rdfs11 also ENTAIL the closed schema pairs as triples
+    g1 = t.unionByName(_rdfs7(t, sp)).unionByName(
+        sp.select(*_iri_triple("_sub", F.lit(RDFS_SUBPROPERTYOF), "_sup"))
     )
-    g1 = t.unionByName(derived7).unionByName(
-        _schema_triples(sp, RDFS_SUBPROPERTYOF)
-    )
-    if materialize_strata:
-        # each stratum frame has SEVERAL consumers (the next stratum's
-        # union branch plus every rule join probing it) — a lazy
-        # checkpoint evaluates it once instead of re-deriving the
-        # whole subtree per consumer. At fact scale where
-        # materializing the stream is worse than re-scanning the
-        # (pushdown-pruned) source, pass materialize_strata=False.
-        g1 = g1.localCheckpoint(eager=False)
+    # each stratum frame has SEVERAL consumers (the next stratum's union
+    # branch plus every rule join probing it) — a lazy checkpoint
+    # evaluates it once instead of re-deriving the whole subtree per
+    # consumer
+    g1 = g1.localCheckpoint(eager=False)
 
     # --- stratum 2: class hierarchy + domain/range -----------------------
     # ONE schema-dim-sized slice feeds the subClassOf closure AND the
@@ -174,25 +243,24 @@ def rdfs_entail(
         .distinct()
     )
     derived2 = g1.join(F.broadcast(dom), g1["pred"] == dom["_p"]).select(
-        *_as_type_triple(F.col("subj"), F.col("_c"))
+        *_as_type_triple("subj", "_c")
     )
     derived3 = (
         g1.where(~F.col("obj_is_literal"))
         .join(F.broadcast(rng), g1["pred"] == rng["_p"])
-        .select(*_as_type_triple(F.col("obj"), F.col("_c")))
+        .select(*_as_type_triple("obj", "_c"))
     )
     g2 = (
         g1.unionByName(derived2)
         .unionByName(derived3)
-        .unionByName(_schema_triples(sc, RDFS_SUBCLASSOF))
+        .unionByName(sc.select(*_iri_triple("_sub", F.lit(RDFS_SUBCLASSOF), "_sup")))
+        .localCheckpoint(eager=False)
     )
-    if materialize_strata:
-        g2 = g2.localCheckpoint(eager=False)
 
     # --- stratum 3: type inheritance (rdfs9) -----------------------------
     types = g2.where(F.col("pred") == RDF_TYPE)
     derived9 = types.join(F.broadcast(sc), types["obj"] == sc["_sub"]).select(
-        *_as_type_triple(F.col("subj"), F.col("_sup"))
+        *_as_type_triple("subj", "_sup")
     )
     return g2.unionByName(derived9).distinct()
 
@@ -305,6 +373,27 @@ OWL_EQPROP = "http://www.w3.org/2002/07/owl#equivalentProperty"
 _PSEP = "\x00"  # joins pred onto node ids for the pooled closure
 
 
+def _property_dims(schema: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(inv_both, sym, trans) broadcast property dimensions from a
+    schema-dim-sized slice holding the IRI-object ``owl:inverseOf``
+    axioms and the Symmetric/Transitive typings. ``inv_both`` carries
+    each inverse pair in both directions, since inverseOf is its own
+    inverse."""
+    inv = (
+        schema.where(F.col("pred") == OWL_INVERSEOF)
+        .select(F.col("subj").alias("_p"), F.col("obj").alias("_q"))
+        .distinct()
+    )
+    inv_both = inv.unionByName(
+        inv.select(F.col("_q").alias("_p"), F.col("_p").alias("_q"))
+    ).distinct()
+    return (
+        inv_both,
+        _declared_props(schema, OWL_SYMMETRIC),
+        _declared_props(schema, OWL_TRANSITIVE),
+    )
+
+
 def _expand_inv_sym(
     g: DataFrame, inv_both: DataFrame, sym: DataFrame
 ) -> DataFrame:
@@ -315,23 +404,40 @@ def _expand_inv_sym(
     iri_asserts = g.where(~F.col("obj_is_literal"))
     derived_inv = iri_asserts.join(
         F.broadcast(inv_both), iri_asserts["pred"] == inv_both["_p"]
-    ).select(
-        F.col("obj").alias("subj"),
-        F.col("_q").alias("pred"),
-        F.col("subj").alias("obj"),
-        F.lit(None).cast("string").alias("obj_lang"),
-        F.lit(False).alias("obj_is_literal"),
-    )
+    ).select(*_iri_triple("obj", "_q", "subj"))
     derived_sym = iri_asserts.join(
         F.broadcast(sym), iri_asserts["pred"] == sym["_p"]
-    ).select(
-        F.col("obj").alias("subj"),
-        F.col("pred"),
-        F.col("subj").alias("obj"),
-        F.lit(None).cast("string").alias("obj_lang"),
-        F.lit(False).alias("obj_is_literal"),
-    )
+    ).select(*_iri_triple("obj", "pred", "subj"))
     return g.unionByName(derived_inv).unionByName(derived_sym)
+
+
+def _pooled_edges(g: DataFrame, trans: DataFrame) -> DataFrame:
+    """Distinct ``pred\\x00subj -> pred\\x00obj`` edges of the IRI
+    assertions on the ``trans`` predicates: fusing the predicate into
+    the node key pools every transitive predicate into ONE closure run,
+    and paths cannot cross predicates because the join key carries the
+    predicate."""
+    return (
+        g.where(~F.col("obj_is_literal"))
+        .join(F.broadcast(trans), g["pred"] == trans["_p"])
+        .select(
+            F.concat_ws(_PSEP, "pred", "subj").alias("src"),
+            F.concat_ws(_PSEP, "pred", "obj").alias("dst"),
+        )
+        .where(F.col("src") != F.col("dst"))
+        .distinct()
+    )
+
+
+def _unpool(closed: DataFrame) -> DataFrame:
+    """Closure pairs of ``_pooled_edges`` back to IRI triples."""
+    return closed.select(
+        *_iri_triple(
+            F.substring_index("src", _PSEP, -1),
+            F.substring_index("src", _PSEP, 1),
+            F.substring_index("dst", _PSEP, -1),
+        )
+    )
 
 
 def rdfs_plus_entail(
@@ -339,7 +445,6 @@ def rdfs_plus_entail(
     *,
     max_schema_depth: int = 20,
     max_transitive_depth: int = 20,
-    materialize_strata: bool = True,
 ) -> DataFrame:
     """RDFS-Plus materialization: the full ``rdfs_entail`` rule set
     plus the three OWL property characteristics every production
@@ -374,17 +479,19 @@ def rdfs_plus_entail(
     symmetric transitive property closes over both directions, and
     once more AFTER it so the inverse of a transitive property mirrors
     the closure pairs; class rules run last so domain/range see every
-    derived assertion.
+    derived assertion. The property dimensions (inverse pairs,
+    Symmetric, Transitive) are read from the generalized graph, before
+    any mirror.
 
     Scale shape: inverse/symmetric are broadcast-join /
     map-side-union expansions of the instance stream.  The transitive
     closure pools EVERY transitive predicate into ONE distributed
     frontier-BFS run by fusing the predicate into the node key
-    (``pred\\x00node``) — paths cannot cross predicates because the
-    join key carries the predicate, and one closure job replaces P
-    sequential ones.  Literal-object assertions never enter inverse /
+    (``pred\\x00node``, ``_pooled_edges``) — one closure job replaces
+    P sequential ones.  Literal-object assertions never enter inverse /
     transitive expansion (their inverses/compositions are not valid
-    RDF)."""
+    RDF). Every stratum frame with several consumers is lazily
+    checkpointed, so each evaluates once."""
     t = triples.select(*_TRIPLE_COLS)
 
     # stratum 0: equivalence desugaring (scm-eqc1 / scm-eqp1). Must run
@@ -397,21 +504,9 @@ def rdfs_plus_entail(
             .select("subj", "obj")
             .distinct()
         )
-        fwd = pairs.select(
-            "subj",
-            F.lit(sub_pred).alias("pred"),
-            "obj",
-            F.lit(None).cast("string").alias("obj_lang"),
-            F.lit(False).alias("obj_is_literal"),
+        return pairs.select(*_iri_triple("subj", F.lit(sub_pred), "obj")).unionByName(
+            pairs.select(*_iri_triple("obj", F.lit(sub_pred), "subj"))
         )
-        rev = pairs.select(
-            F.col("obj").alias("subj"),
-            F.lit(sub_pred).alias("pred"),
-            F.col("subj").alias("obj"),
-            F.lit(None).cast("string").alias("obj_lang"),
-            F.lit(False).alias("obj_is_literal"),
-        )
-        return fwd.unionByName(rev)
 
     # no distinct here: a desugared sub-axiom duplicating an asserted
     # one is collapsed by the final rdfs_entail distinct; a fact-scale
@@ -419,39 +514,28 @@ def rdfs_plus_entail(
     t = t.unionByName(_eq_to_sub(OWL_EQCLASS, RDFS_SUBCLASSOF)).unionByName(
         _eq_to_sub(OWL_EQPROP, RDFS_SUBPROPERTYOF)
     )
-    if materialize_strata:
-        # t is evaluated by the subPropertyOf closure probe AND again
-        # when g1 materializes; when the input arrives as a live plan
-        # (joins/unions upstream) each evaluation re-runs it. One lazy
-        # checkpoint; the g1 checkpoint below then copies from it.
-        t = t.localCheckpoint(eager=False)
+    # t is evaluated by the subPropertyOf closure probe AND again when
+    # g1 materializes; when the input arrives as a live plan
+    # (joins/unions upstream) each evaluation re-runs it. One lazy
+    # checkpoint; the g1 checkpoint below then copies from it.
+    t = t.localCheckpoint(eager=False)
 
     # stratum 1: property hierarchy (reuse rdfs_entail's rules later;
     # here we only need the generalized assertions for owl expansion)
     sp = _schema_closure(t, RDFS_SUBPROPERTYOF, max_depth=max_schema_depth)
     sp = sp.localCheckpoint(eager=True)  # shared with the inner rdfs_entail
-    derived7 = t.join(F.broadcast(sp), t["pred"] == sp["_sub"]).select(
-        F.col("subj"),
-        F.col("_sup").alias("pred"),
-        F.col("obj"),
-        F.col("obj_lang"),  # object term verbatim, lang tag included
-        F.col("obj_is_literal"),
-    )
-    g1 = t.unionByName(derived7)
-    if materialize_strata:
-        # g1 has MANY consumers below (the property-dimension slice,
-        # both expansion passes, the transitive-edge extraction, and
-        # the inner rdfs_entail) — without a checkpoint each broadcast
-        # build and closure probe re-evaluates the full input stream
-        # (~10 evaluations measured on the bench fixture). Same
-        # tradeoff knob as rdfs_entail's materialize_strata.
-        g1 = g1.localCheckpoint(eager=False)
+    # g1 has MANY consumers below (the property-dimension slice, both
+    # expansion passes, the transitive-edge extraction, and the inner
+    # rdfs_entail) — without a checkpoint each broadcast build and
+    # closure probe re-evaluates the full input stream (~10 evaluations
+    # measured on the bench fixture)
+    g1 = t.unionByName(_rdfs7(t, sp)).localCheckpoint(eager=False)
 
     # stratum 2: inverse + symmetric expansion (IRI objects only).
-    # The three property dimensions (inverseOf pairs, Symmetric,
-    # Transitive) come from ONE schema-dim-sized slice of g1 so the
-    # stream is scanned once for all of them, and the eager checkpoint
-    # pins the tiny slice for its five broadcast consumers.
+    # The three property dimensions come from ONE schema-dim-sized
+    # slice of g1 so the stream is scanned once for all of them, and
+    # the eager checkpoint pins the tiny slice for its broadcast
+    # consumers.
     prop_slice = (
         g1.where(
             ((F.col("pred") == OWL_INVERSEOF) & ~F.col("obj_is_literal"))
@@ -463,56 +547,15 @@ def rdfs_plus_entail(
         .select("subj", "pred", "obj")
         .localCheckpoint(eager=True)
     )
-    inv = (
-        prop_slice.where(F.col("pred") == OWL_INVERSEOF)
-        .select(F.col("subj").alias("_p"), F.col("obj").alias("_q"))
-        .distinct()
-    )
-    inv_both = inv.unionByName(
-        inv.select(F.col("_q").alias("_p"), F.col("_p").alias("_q"))
-    ).distinct()
-    sym = (
-        prop_slice.where(F.col("obj") == OWL_SYMMETRIC)
-        .select(F.col("subj").alias("_p"))
-        .distinct()
-    )
-
-    def _inv_sym_expand(g: DataFrame) -> DataFrame:
-        return _expand_inv_sym(g, inv_both, sym)
-
-    g2 = _inv_sym_expand(g1)
-    if materialize_strata:
-        # g2 is read by the transitive-edge extraction AND three times
-        # by the g3 expansion (x ∪ inv(x) ∪ sym(x) references x per
-        # branch) — checkpoint once instead of four evaluations
-        g2 = g2.localCheckpoint(eager=False)
+    inv_both, sym, trans = _property_dims(prop_slice)
+    # g2 is read by the transitive-edge extraction AND three times by
+    # the g3 expansion (x ∪ inv(x) ∪ sym(x) references x per branch) —
+    # checkpoint once instead of four evaluations
+    g2 = _expand_inv_sym(g1, inv_both, sym).localCheckpoint(eager=False)
 
     # stratum 3: pooled transitive closure over every TransitiveProperty
-    # (from g2, as before — an inverse/symmetric mirror can in principle
-    # mint a new typing triple; with g1 checkpointed this probe is one
-    # map-side pass over the materialized stream, not a re-derivation)
-    trans = (
-        g2.where((F.col("pred") == RDF_TYPE) & (F.col("obj") == OWL_TRANSITIVE))
-        .select(F.col("subj").alias("_p"))
-        .distinct()
-    )
-    tedges = (
-        g2.where(~F.col("obj_is_literal"))
-        .join(F.broadcast(trans), g2["pred"] == trans["_p"])
-        .select(
-            F.concat_ws(_PSEP, "pred", "subj").alias("src"),
-            F.concat_ws(_PSEP, "pred", "obj").alias("dst"),
-        )
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    closed = transitive_closure(tedges, max_depth=max_transitive_depth)
-    derived_trans = closed.select(
-        F.substring_index("src", _PSEP, -1).alias("subj"),
-        F.substring_index("src", _PSEP, 1).alias("pred"),
-        F.substring_index("dst", _PSEP, -1).alias("obj"),
-        F.lit(None).cast("string").alias("obj_lang"),
-        F.lit(False).alias("obj_is_literal"),
+    closed = transitive_closure(
+        _pooled_edges(g2, trans), max_depth=max_transitive_depth
     )
     # re-apply inverse/symmetric AFTER the closure: (P inv Q) with P
     # transitive entails Q-mirrors of every CLOSURE pair, which the
@@ -520,35 +563,28 @@ def rdfs_plus_entail(
     # the fixpoint for these characteristics (Q's own closure is the
     # exact mirror of P's, and symmetric props were symmetrized before
     # closing) — no iteration needed.
-    g3 = _inv_sym_expand(g2.unionByName(derived_trans))
+    g3 = _expand_inv_sym(g2.unionByName(_unpool(closed)), inv_both, sym)
 
     # stratum 4: full RDFS class/property rules over the expanded graph
     # (the inner rdfs7 pass is still needed — inverse/transitive-derived
     # assertions must be generalized too — but it reuses the checkpointed
-    # subPropertyOf closure instead of re-running the closure job chain)
-    out = rdfs_entail(
-        g3,
-        max_schema_depth=max_schema_depth,
-        materialize_strata=materialize_strata,
-        _sp=sp,
+    # subPropertyOf closure instead of re-running the closure job chain).
+    # `out` feeds BOTH the stratum-5 schema slice and the final union:
+    # un-checkpointed, the whole entailed stream evaluates twice; one
+    # lazy checkpoint halves that.
+    out = rdfs_entail(g3, max_schema_depth=max_schema_depth, _sp=sp).localCheckpoint(
+        eager=False
     )
-    if materialize_strata:
-        # `out` feeds BOTH the stratum-5 schema slice and the final
-        # union: un-checkpointed, the whole entailed stream evaluates
-        # twice (the docstring's former "two fact-stream evaluations");
-        # one lazy checkpoint halves that.
-        out = out.localCheckpoint(eager=False)
 
     # stratum 5: re-derive closed equivalences from mutual subsumption
     # (scm-eqc2 / scm-eqp2) — this is how ≡'s own symmetry and
     # transitivity materialize. Extract the schema-dim-sized slice
     # (sub-hierarchies + asserted equivalences) from `out` ONCE and
     # lazily checkpoint it: the self-joins below would otherwise each
-    # re-evaluate the un-checkpointed fact-scale entailed plan just to
-    # read a handful of schema rows (out itself still feeds the final
-    # union — two fact-stream evaluations total, not five). LAZY
-    # checkpoint (same as rdfs_entail's strata): materializes bottom-up
-    # on the first action, so building this plan stays job-free.
+    # re-evaluate the fact-scale entailed plan just to read a handful
+    # of schema rows. LAZY checkpoint (same as rdfs_entail's strata):
+    # materializes bottom-up on the first action, so building this plan
+    # stays job-free.
     schema_slice = (
         out.where(
             F.col("pred").isin(
@@ -569,13 +605,7 @@ def rdfs_plus_entail(
             .distinct()
         )
         rev = sub.select(F.col("obj").alias("subj"), F.col("subj").alias("obj"))
-        return sub.intersect(rev).select(
-            "subj",
-            F.lit(eq_pred).alias("pred"),
-            "obj",
-            F.lit(None).cast("string").alias("obj_lang"),
-            F.lit(False).alias("obj_is_literal"),
-        )
+        return sub.intersect(rev).select(*_iri_triple("subj", F.lit(eq_pred), "obj"))
 
     eq_derived = _mutual(RDFS_SUBCLASSOF, OWL_EQCLASS).unionByName(
         _mutual(RDFS_SUBPROPERTYOF, OWL_EQPROP)
@@ -638,26 +668,19 @@ def apply_rules_to_delta(
     drops into a STREAMING frame (streaming/jobs.streaming_entail).
     Returns the delta plus its consequences, NOT deduplicated (batch
     callers add ``.distinct()``; streams leave dedup to compaction)."""
-    d7 = d.join(F.broadcast(sp), d["pred"] == sp["_sub"]).select(
-        F.col("subj"),
-        F.col("_sup").alias("pred"),
-        F.col("obj"),
-        F.col("obj_lang"),
-        F.col("obj_is_literal"),
-    )
-    n1 = d.unionByName(d7)
+    n1 = d.unionByName(_rdfs7(d, sp))
     d2 = n1.join(F.broadcast(dom), n1["pred"] == dom["_p"]).select(
-        *_as_type_triple(F.col("subj"), F.col("_c"))
+        *_as_type_triple("subj", "_c")
     )
     d3 = (
         n1.where(~F.col("obj_is_literal"))
         .join(F.broadcast(rng), n1["pred"] == rng["_p"])
-        .select(*_as_type_triple(F.col("obj"), F.col("_c")))
+        .select(*_as_type_triple("obj", "_c"))
     )
     n2 = n1.unionByName(d2).unionByName(d3)
     types = n2.where(F.col("pred") == RDF_TYPE)
     d9 = types.join(F.broadcast(sc), types["obj"] == sc["_sub"]).select(
-        *_as_type_triple(F.col("subj"), F.col("_sup"))
+        *_as_type_triple("subj", "_sup")
     )
     return n2.unionByName(d9)
 
@@ -682,22 +705,11 @@ def _schema_in_delta(d: DataFrame, sp: DataFrame, *extra_preds: str) -> bool:
     ).isEmpty()
 
 
-def _append_new(e: DataFrame, fresh: DataFrame) -> DataFrame:
-    """Null-safe anti-join: append to ``e`` only the triples of
-    ``fresh`` it does not already hold."""
-    cond = None
-    for c in _TRIPLE_COLS:
-        eq = fresh[c].eqNullSafe(e[c])
-        cond = eq if cond is None else (cond & eq)
-    return e.unionByName(fresh.join(e, cond, "left_anti"))
-
-
 def rdfs_entail_delta(
     entailed: DataFrame,
     delta: DataFrame,
     *,
     max_schema_depth: int = 20,
-    materialize_entailed: bool = True,
 ) -> DataFrame:
     """Incremental (semi-naive) RDFS maintenance: given a previously
     ENTAILED graph and a batch of newly asserted triples, return the
@@ -707,27 +719,24 @@ def rdfs_entail_delta(
     This is what makes materialization viable at 100 TB: a daily batch
     of new instance triples costs rules-over-the-DELTA (broadcast
     joins against the already-closed schema) plus one null-safe
-    anti-join against the old graph — the old fact stream is scanned
-    once for the anti-join and never re-derived.  The schema closures
-    are NOT recomputed: ``rdfs_entail`` materializes closed
-    subClassOf/subPropertyOf pairs as triples, so the old graph IS the
-    closure (semi-naive evaluation's "use the saturated database").
+    anti-join against the old graph (``_append_new``) — the old fact
+    stream is scanned once for the anti-join and never re-derived.
+    The schema closures are NOT recomputed: ``rdfs_entail``
+    materializes closed subClassOf/subPropertyOf pairs as triples, so
+    the old graph IS the closure (semi-naive evaluation's "use the
+    saturated database").
 
     If the delta itself contains schema triples (subClassOf,
     subPropertyOf, domain, range, inverseOf, or Symmetric/Transitive
     typing) the saturated-schema shortcut is invalid — the operator
     detects that with one probe of the (small) delta and falls back to
     a full ``rdfs_entail`` over the union, which is always correct
-    (entailment is idempotent).
-
-    ``materialize_entailed``: as in ``rdfs_plus_entail_delta`` — pin a
-    LIVE ``entailed`` plan once (schema views + anti-join + union all
-    re-read it); pass False for stored tables.
+    (entailment is idempotent). The old graph is lazily checkpointed
+    once, since the schema views, the anti-join and the union all
+    re-read it.
     """
     d = delta.select(*_TRIPLE_COLS)
-    e = entailed.select(*_TRIPLE_COLS)
-    if materialize_entailed:
-        e = e.localCheckpoint(eager=False)
+    e = entailed.select(*_TRIPLE_COLS).localCheckpoint(eager=False)
     # one pinned schema slice for the four saturated views (see
     # rdfs_plus_entail_delta) instead of four full scans of the old
     # graph; materializes the lazy e-checkpoint as a side effect
@@ -759,7 +768,6 @@ def rdfs_plus_entail_delta(
     *,
     max_schema_depth: int = 20,
     max_transitive_depth: int = 20,
-    materialize_entailed: bool = True,
 ) -> DataFrame:
     """Incremental (semi-naive) RDFS-PLUS maintenance: given a graph
     previously saturated by ``rdfs_plus_entail`` and a batch of new
@@ -794,19 +802,13 @@ def rdfs_plus_entail_delta(
     delta → full ``rdfs_plus_entail`` over the union (idempotent,
     always correct).
 
-    ``materialize_entailed`` (default True) lazily localCheckpoints
-    the old graph once: this function reads it ~8 times (schema views,
-    property dimensions, the two closure-bridge slices, the final
-    anti-join + union), and when ``entailed`` arrives as a LIVE plan
-    (the common test/pipeline composition) every read would otherwise
-    re-run the full base saturation. Pass False when the input is
-    already a stored table whose re-scan is cheaper than a block-
-    storage copy (the 100-TB shape: Parquet serves the slices with
-    predicate pushdown the checkpoint copy cannot)."""
+    The old graph is lazily checkpointed once: this function reads it
+    ~8 times (schema views, property dimensions, the two closure-bridge
+    slices, the final anti-join + union), and when ``entailed`` arrives
+    as a LIVE plan (the common test/pipeline composition) every read
+    would otherwise re-run the full base saturation."""
     d = delta.select(*_TRIPLE_COLS)
-    e = entailed.select(*_TRIPLE_COLS)
-    if materialize_entailed:
-        e = e.localCheckpoint(eager=False)
+    e = entailed.select(*_TRIPLE_COLS).localCheckpoint(eager=False)
     # ONE schema-dim-sized slice of the saturated graph feeds all seven
     # dimension builds below (sp/sc/dom/rng views + inv/sym/trans) —
     # without it each build is its own full scan of the old graph. The
@@ -814,12 +816,15 @@ def rdfs_plus_entail_delta(
     # here, so every later job reads stored blocks.
     e_schema = (
         e.where(
-            F.col("pred").isin(
-                RDFS_SUBPROPERTYOF,
-                RDFS_SUBCLASSOF,
-                RDFS_DOMAIN,
-                RDFS_RANGE,
-                OWL_INVERSEOF,
+            (
+                F.col("pred").isin(
+                    RDFS_SUBPROPERTYOF,
+                    RDFS_SUBCLASSOF,
+                    RDFS_DOMAIN,
+                    RDFS_RANGE,
+                    OWL_INVERSEOF,
+                )
+                & ~F.col("obj_is_literal")
             )
             | (
                 (F.col("pred") == RDF_TYPE)
@@ -836,44 +841,12 @@ def rdfs_plus_entail_delta(
             max_schema_depth=max_schema_depth,
             max_transitive_depth=max_transitive_depth,
         )
-
-    # property dimensions from the pinned schema slice (schema-dim-sized)
-    inv = (
-        e_schema.where(
-            (F.col("pred") == OWL_INVERSEOF) & ~F.col("obj_is_literal")
-        )
-        .select(F.col("subj").alias("_p"), F.col("obj").alias("_q"))
-        .distinct()
-    )
-    inv_both = inv.unionByName(
-        inv.select(F.col("_q").alias("_p"), F.col("_p").alias("_q"))
-    ).distinct()
-    sym = (
-        e_schema.where(
-            (F.col("pred") == RDF_TYPE) & (F.col("obj") == OWL_SYMMETRIC)
-        )
-        .select(F.col("subj").alias("_p"))
-        .distinct()
-    )
-    trans = (
-        e_schema.where(
-            (F.col("pred") == RDF_TYPE) & (F.col("obj") == OWL_TRANSITIVE)
-        )
-        .select(F.col("subj").alias("_p"))
-        .distinct()
-    )
+    inv_both, sym, trans = _property_dims(e_schema)
 
     # stratum 1: generalize the delta through the saturated property
     # hierarchy (rdfs7) so sub-property assertions of transitive /
     # mirrored properties participate below
-    d7 = d.join(F.broadcast(sp), d["pred"] == sp["_sub"]).select(
-        F.col("subj"),
-        F.col("_sup").alias("pred"),
-        F.col("obj"),
-        F.col("obj_lang"),
-        F.col("obj_is_literal"),
-    )
-    n1 = d.unionByName(d7)
+    n1 = d.unionByName(_rdfs7(d, sp))
 
     # stratum 2: inverse/symmetric mirrors of the new assertions
     n2 = _expand_inv_sym(n1, inv_both, sym)
@@ -882,20 +855,8 @@ def rdfs_plus_entail_delta(
     # the node key, as in rdfs_plus_entail). The delta side of every
     # join is broadcast; the old closure is read as two pred-filtered
     # slices of the saturated graph.
-    def _fused(g: DataFrame) -> DataFrame:
-        return (
-            g.where(~F.col("obj_is_literal"))
-            .join(F.broadcast(trans), g["pred"] == trans["_p"])
-            .select(
-                F.concat_ws(_PSEP, "pred", "subj").alias("src"),
-                F.concat_ws(_PSEP, "pred", "obj").alias("dst"),
-            )
-            .where(F.col("src") != F.col("dst"))
-            .distinct()
-        )
-
-    d_edges = _fused(n2).localCheckpoint(eager=True)  # small: delta-sized
-    e_pairs = _fused(e)  # old closure pairs (C), pred-filtered slice
+    d_edges = _pooled_edges(n2, trans).localCheckpoint(eager=True)  # delta-sized
+    e_pairs = _pooled_edges(e, trans)  # old closure pairs (C), pred-filtered slice
     # C? ∘ Δ : extend each new edge backwards through the old closure
     pre = d_edges.unionByName(
         e_pairs.select(F.col("src"), F.col("dst").alias("_mid")).join(
@@ -921,13 +882,6 @@ def rdfs_plus_entail_delta(
         .localCheckpoint(eager=True)
     )
     closed = transitive_closure(bridged, max_depth=max_transitive_depth)
-    derived_trans = closed.select(
-        F.substring_index("src", _PSEP, -1).alias("subj"),
-        F.substring_index("src", _PSEP, 1).alias("pred"),
-        F.substring_index("dst", _PSEP, -1).alias("obj"),
-        F.lit(None).cast("string").alias("obj_lang"),
-        F.lit(False).alias("obj_is_literal"),
-    )
 
     # stratum 4: mirror the NEW closure pairs (inverse of a transitive
     # property mirrors the closure), then class rules over everything.
@@ -938,7 +892,7 @@ def rdfs_plus_entail_delta(
     # frame is delta-sized, so the copy is the cheap side of that trade
     # at any scale.
     n3 = _expand_inv_sym(
-        n2.unionByName(derived_trans), inv_both, sym
+        n2.unionByName(_unpool(closed)), inv_both, sym
     ).localCheckpoint(eager=False)
     fresh = apply_rules_to_delta(n3, sp, sc, dom, rng).distinct()
     return _append_new(e, fresh)
@@ -967,18 +921,8 @@ def functional_violations(triples: DataFrame) -> DataFrame:
     'functional' (values) but never in 'inverse_functional' (only IRIs
     can be merge candidates)."""
     t = triples.select(*_TRIPLE_COLS)
-    fp = (
-        t.where((F.col("pred") == RDF_TYPE) & (F.col("obj") == OWL_FUNCTIONAL))
-        .select(F.col("subj").alias("_p"))
-        .distinct()
-    )
-    ifp = (
-        t.where(
-            (F.col("pred") == RDF_TYPE) & (F.col("obj") == OWL_INVERSE_FUNCTIONAL)
-        )
-        .select(F.col("subj").alias("_p"))
-        .distinct()
-    )
+    fp = _declared_props(t, OWL_FUNCTIONAL)
+    ifp = _declared_props(t, OWL_INVERSE_FUNCTIONAL)
     f_slice = t.join(F.broadcast(fp), t["pred"] == fp["_p"]).select(
         F.col("subj").alias("node"), "pred",
         F.concat_ws(
@@ -1044,7 +988,7 @@ def _collect_rdf_lists(
             (F.col("pred") == _RDF_FIRST)
             | ((F.col("pred") == _RDF_REST) & ~F.col("obj_is_literal"))
         )
-        .select("subj", "pred", "obj", "obj_lang", "obj_is_literal")
+        .select(*_TRIPLE_COLS)
         .limit(_CLOSURE_DRIVER_EDGE_MAX + 1)
         .collect()
     )
@@ -1158,19 +1102,8 @@ def apply_property_chains(
                 cur = cur.join(nxt, "_o").select(
                     "_s", F.col("_o2").alias("_o")
                 )
-            outs.append(
-                cur.select(
-                    F.col("_s").alias("subj"),
-                    F.lit(r).alias("pred"),
-                    F.col("_o").alias("obj"),
-                    F.lit(None).cast("string").alias("obj_lang"),
-                    F.lit(False).alias("obj_is_literal"),
-                )
-            )
-        d = outs[0]
-        for o in outs[1:]:
-            d = d.unionByName(o)
-        return d.distinct()
+            outs.append(cur.select(*_iri_triple("_s", F.lit(r), "_o")))
+        return _union_all(outs).distinct()
 
     g = t
     converged = False
@@ -1232,14 +1165,6 @@ def _collision_star_edges(
         slice_.join(hubs, keys)
         .where(F.col("member") != F.col("_hub"))
         .select(F.col("_hub").alias("src"), F.col("member").alias("dst"))
-        .distinct()
-    )
-
-
-def _declared_props(t: DataFrame, type_iri: str) -> DataFrame:
-    return (
-        t.where((F.col("pred") == RDF_TYPE) & (F.col("obj") == type_iri))
-        .select(F.col("subj").alias("_p"))
         .distinct()
     )
 
@@ -1406,19 +1331,6 @@ OWL_ALLVALUES = "http://www.w3.org/2002/07/owl#allValuesFrom"
 OWL_THING = "http://www.w3.org/2002/07/owl#Thing"
 
 
-def _row_key() -> F.Column:
-    """Null-safe full-row identity key for triple set differences
-    (plain multi-column anti-joins drop NULL-lang rows: NULL ≠ NULL)."""
-    return F.concat_ws(
-        "\x1f",
-        F.col("subj"),
-        F.col("pred"),
-        F.col("obj"),
-        F.coalesce(F.col("obj_lang"), F.lit("\x00")),
-        F.col("obj_is_literal").cast("string"),
-    )
-
-
 def restrictions_entail(
     triples: DataFrame, *, max_rounds: int = 10
 ) -> DataFrame:
@@ -1438,9 +1350,10 @@ def restrictions_entail(
       valid RDF)
 
     Returns input ∪ entailed (idempotent). Rules chain (an avf-derived
-    type can satisfy an svf filler), so they run to fixpoint with a
-    per-round novelty anti-join on the null-safe row key; restriction
-    chains are shallow in practice — ``max_rounds`` raises if not.
+    type can satisfy an svf filler), so they run to fixpoint in the
+    shared semi-naive loop (``_seminaive``, a per-round null-safe
+    novelty anti-join); restriction chains are shallow in practice —
+    ``max_rounds`` raises if not.
 
     Scale shape: restriction axioms are SCHEMA — the three
     (class, prop, …) dimensions are broadcast once, eagerly
@@ -1493,15 +1406,6 @@ def restrictions_entail(
     if not (have_hv or have_svf or have_avf):
         return t
 
-    def _new_type(subj_col: F.Column, cls_col: F.Column, frame: DataFrame) -> DataFrame:
-        return frame.select(
-            subj_col.alias("subj"),
-            F.lit(RDF_TYPE).alias("pred"),
-            cls_col.alias("obj"),
-            F.lit(None).cast("string").alias("obj_lang"),
-            F.lit(False).alias("obj_is_literal"),
-        )
-
     # loop-invariant hoists: the axiom dimensions never change, so
     # the owl:Thing slice and its probe run ONCE
     thing = svf_dim.where(F.col("_d") == OWL_THING)
@@ -1511,16 +1415,12 @@ def restrictions_entail(
     )
     avf_classes = F.broadcast(avf_dim.select("_c").distinct())
 
-    def _types_of(frame: DataFrame) -> DataFrame:
-        return frame.where(
-            (F.col("pred") == RDF_TYPE) & ~F.col("obj_is_literal")
-        )
-
-    def _derive(delta: DataFrame, allf: DataFrame, first: bool) -> DataFrame | None:
+    def _derive(delta: DataFrame, allf: DataFrame) -> list[DataFrame]:
         """One semi-naive round: the LINEAR rules (hv1/hv2/svf2) read
         only the delta; the two-fact rules (svf1/avf) correlate
         delta-vs-all in BOTH orientations (first round: all-vs-all
         once — delta IS all, two orientations would double-derive)."""
+        first = delta is allf
         d_types = _types_of(delta)
         derived: list[DataFrame] = []
         if have_hv:
@@ -1536,8 +1436,7 @@ def restrictions_entail(
                 )
             )
             # full RDF term identity on the value — null-safe lang
-            # equality (NULL and '' are DIFFERENT tags, matching
-            # _row_key's sentinel)
+            # equality (NULL and '' are DIFFERENT tags, as in _novel)
             hv2 = delta.join(
                 F.broadcast(hv_dim),
                 (delta["pred"] == hv_dim["_p"])
@@ -1545,12 +1444,12 @@ def restrictions_entail(
                 & delta["obj_lang"].eqNullSafe(hv_dim["_vl"])
                 & (delta["obj_is_literal"] == hv_dim["_vlit"]),
             )
-            derived.append(_new_type(delta["subj"], F.col("_c"), hv2))
+            derived.append(hv2.select(*_as_type_triple(delta["subj"], "_c")))
         if have_thing:
             sv2 = delta.join(
                 F.broadcast(thing), delta["pred"] == thing["_p"]
             )
-            derived.append(_new_type(delta["subj"], F.col("_c"), sv2))
+            derived.append(sv2.select(*_as_type_triple(delta["subj"], "_c")))
 
         def _svf1(facts_side: DataFrame, types_side: DataFrame) -> DataFrame:
             typed_d = _types_of(types_side).join(
@@ -1565,7 +1464,7 @@ def restrictions_entail(
                     & (F.col("_yd") == svf_dim["_d"]),
                 )
             )
-            return _new_type(facts_side["subj"], F.col("_c"), sv1)
+            return sv1.select(*_as_type_triple(facts_side["subj"], "_c"))
 
         def _avf(types_side: DataFrame, facts_side: DataFrame) -> DataFrame:
             typed_c = _types_of(types_side).join(
@@ -1580,7 +1479,7 @@ def restrictions_entail(
                     & (F.col("_xc") == avf_dim["_c"]),
                 )
             )
-            return _new_type(facts_side["obj"], F.col("_d"), av)
+            return av.select(*_as_type_triple(facts_side["obj"], "_d"))
 
         if have_svf:
             derived.append(_svf1(delta, allf))
@@ -1590,43 +1489,11 @@ def restrictions_entail(
             derived.append(_avf(allf, delta))
             if not first:
                 derived.append(_avf(delta, allf))
-        if not derived:
-            return None
-        new = derived[0]
-        for d in derived[1:]:
-            new = new.unionByName(d)
-        return new
+        return derived
 
-    facts = t.localCheckpoint(eager=True)
-    delta, first = facts, True
-    for _ in range(max_rounds):
-        new = _derive(delta, facts, first)
-        first = False
-        if new is None:
-            break
-        new = (
-            new.distinct()
-            .withColumn("_k", _row_key())
-            .join(
-                facts.select(_row_key().alias("_k")),
-                "_k",
-                "left_anti",
-            )
-            .drop("_k")
-            .localCheckpoint(eager=True)
-        )
-        if new.isEmpty():
-            break
-        # union of eagerly-checkpointed leaves: re-reads are cheap and
-        # the accumulated graph is never re-copied per round (the
-        # transitive_closure pattern)
-        facts = facts.unionByName(new)
-        delta = new
-    else:
-        raise ValueError(
-            f"restrictions_entail: no fixpoint within {max_rounds} rounds"
-        )
-    return facts
+    return _seminaive(
+        t.localCheckpoint(eager=True), _derive, max_rounds, "restrictions_entail"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1710,8 +1577,9 @@ def class_expressions_entail(
     * cls-uni:  ``C unionOf (c1..ck), x type ci (ANY) ⇒ x type C``
 
     Rules chain (a oneOf/union-derived typing can complete an
-    intersection), so they run semi-naive to fixpoint with a per-round
-    novelty anti-join on the null-safe row key. Returns
+    intersection), so they run to fixpoint in the shared semi-naive
+    loop (``_seminaive``, a per-round null-safe novelty anti-join),
+    whose starting facts already hold the static rows. Returns
     input ∪ entailed (idempotent).
 
     Scale shape: the axioms are SCHEMA — member lists walk driver-side
@@ -1790,26 +1658,13 @@ def class_expressions_entail(
         else None
     )
 
-    def _types_of(frame: DataFrame) -> DataFrame:
-        return frame.where(
-            (F.col("pred") == RDF_TYPE) & ~F.col("obj_is_literal")
-        )
-
-    def _derive(delta: DataFrame, allf: DataFrame) -> DataFrame | None:
+    def _derive(delta: DataFrame, allf: DataFrame) -> list[DataFrame]:
         d_types = _types_of(delta)
         derived: list[DataFrame] = []
         if int_dim is not None:
             # cls-int2 (linear): delta typing of the intersection class
             i2 = d_types.join(int_dim, d_types["obj"] == int_dim["_c"])
-            derived.append(
-                i2.select(
-                    "subj",
-                    F.lit(RDF_TYPE).alias("pred"),
-                    F.col("_m").alias("obj"),
-                    F.lit(None).cast("string").alias("obj_lang"),
-                    F.lit(False).alias("obj_is_literal"),
-                )
-            )
+            derived.append(i2.select(*_as_type_triple("subj", "_m")))
             # cls-int1 (conjunctive): only (x, axiom) pairs TOUCHED by
             # the delta can newly satisfy the conjunction
             cand = (
@@ -1838,67 +1693,20 @@ def class_expressions_entail(
                 .join(cnt_dim.select("_i", "_k"), "_i")
                 .where(F.col("_n") == F.col("_k"))
             )
-            derived.append(
-                sat.select(
-                    "subj",
-                    F.lit(RDF_TYPE).alias("pred"),
-                    F.col("_c").alias("obj"),
-                    F.lit(None).cast("string").alias("obj_lang"),
-                    F.lit(False).alias("obj_is_literal"),
-                )
-            )
+            derived.append(sat.select(*_as_type_triple("subj", "_c")))
         if uni_dim is not None:
             # cls-uni (linear): delta typing of any union member
             u = d_types.join(uni_dim, d_types["obj"] == uni_dim["_m"])
-            derived.append(
-                u.select(
-                    "subj",
-                    F.lit(RDF_TYPE).alias("pred"),
-                    F.col("_c").alias("obj"),
-                    F.lit(None).cast("string").alias("obj_lang"),
-                    F.lit(False).alias("obj_is_literal"),
-                )
-            )
-        if not derived:
-            return None
-        new = derived[0]
-        for d in derived[1:]:
-            new = new.unionByName(d)
-        return new
+            derived.append(u.select(*_as_type_triple("subj", "_c")))
+        return derived
 
     facts = t.localCheckpoint(eager=True)
     if static_rows:
-        new0 = (
-            spark.createDataFrame(sorted(set(static_rows)), sch)
-            .withColumn("_k", _row_key())
-            .join(facts.select(_row_key().alias("_k")), "_k", "left_anti")
-            .drop("_k")
-            .localCheckpoint(eager=True)
-        )
-        if not new0.isEmpty():
-            facts = facts.unionByName(new0)
-    delta = facts
-    for _ in range(max_rounds):
-        new = _derive(delta, facts)
-        if new is None:
-            break
-        new = (
-            new.distinct()
-            .withColumn("_k", _row_key())
-            .join(facts.select(_row_key().alias("_k")), "_k", "left_anti")
-            .drop("_k")
-            .localCheckpoint(eager=True)
-        )
-        if new.isEmpty():
-            break
-        facts = facts.unionByName(new)
-        delta = new
-    else:
-        raise ValueError(
-            f"class_expressions_entail: no fixpoint within {max_rounds} "
-            "rounds"
-        )
-    return facts
+        # the schema-only rules derive once, before the loop; their new
+        # rows are part of the first round's delta
+        static = spark.createDataFrame(sorted(set(static_rows)), sch)
+        facts = facts.unionByName(_novel(static, facts).localCheckpoint(eager=True))
+    return _seminaive(facts, _derive, max_rounds, "class_expressions_entail")
 
 
 OWL_DISJOINTWITH = "http://www.w3.org/2002/07/owl#disjointWith"
@@ -1953,13 +1761,6 @@ def consistency_violations(triples: DataFrame) -> DataFrame:
     least/greatest so mirror declarations don't double-report."""
     t = triples.select(*_TRIPLE_COLS)
 
-    def _decl(type_iri: str) -> DataFrame:
-        return (
-            t.where((F.col("pred") == RDF_TYPE) & (F.col("obj") == type_iri))
-            .select(F.col("subj").alias("_p"))
-            .distinct()
-        )
-
     def _pairs(pred_iri: str) -> DataFrame:
         # symmetric axiom: normalize so (a,b) and (b,a) declare once
         return (
@@ -2008,7 +1809,7 @@ def consistency_violations(triples: DataFrame) -> DataFrame:
     # prp-irp — map-side: broadcast declared props, filter subj == obj
     irp = (
         t.where((F.col("subj") == F.col("obj")) & ~F.col("obj_is_literal"))
-        .join(F.broadcast(_decl(OWL_IRREFLEXIVE)), F.col("pred") == F.col("_p"), "left_semi")
+        .join(F.broadcast(_declared_props(t, OWL_IRREFLEXIVE)), F.col("pred") == F.col("_p"), "left_semi")
         .select(
             F.lit("prp-irp").alias("rule"), "subj", "pred", "obj",
         )
@@ -2018,7 +1819,7 @@ def consistency_violations(triples: DataFrame) -> DataFrame:
     # prp-asyp — pred-pruned slice ⋈ its mirror; emit each pair once
     asy_slice = (
         t.where(~F.col("obj_is_literal"))
-        .join(F.broadcast(_decl(OWL_ASYMMETRIC)), F.col("pred") == F.col("_p"), "left_semi")
+        .join(F.broadcast(_declared_props(t, OWL_ASYMMETRIC)), F.col("pred") == F.col("_p"), "left_semi")
         .select("subj", "pred", "obj")
         .distinct()
     )

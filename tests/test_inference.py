@@ -1332,3 +1332,151 @@ def test_rdf_list_cell_cap_raises(spark, monkeypatch):
     monkeypatch.setattr(inference, "_CLOSURE_DRIVER_EDGE_MAX", 2)
     with _pytest.raises(ValueError, match="> 2 rdf:first/rdf:rest cells"):
         inference.extract_property_chains(df)
+
+
+# ---------------------------------------------------------------------------
+# Spark-job guard on the benchmark's entailment path; the shared
+# semi-naive loop's round cap and null-safe novelty anti-join
+# ---------------------------------------------------------------------------
+
+# Spark jobs rdfs_plus_entail may run on _plus_fixture, and the same
+# entailment followed by rdfs_plus_entail_delta: every multi-consumer
+# stratum is checkpointed once and every schema dimension comes from
+# one pinned slice. The delta path runs 86 jobs, or 87 when adaptive
+# execution's stage timing adds one two-stage job to the final
+# anti-join count (about half of the runs on a 4-core host).
+PLUS_ENTAIL_MAX_JOBS = 41
+PLUS_DELTA_MAX_JOBS = 87
+
+
+def _jobs_of(spark, group, action):
+    """(result of ``action()``, number of Spark jobs it submitted)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_rdfs_plus_entail_and_delta_job_counts(spark):
+    from sifr_project_java_ontology_processing_spark.operators.inference import (
+        rdfs_plus_entail,
+        rdfs_plus_entail_delta,
+    )
+
+    schema, base, delta = _plus_fixture(spark)
+    n_full, jobs_full = _jobs_of(
+        spark,
+        "plus_entail_job_guard",
+        lambda: rdfs_plus_entail(_triples(spark, schema + base)).count(),
+    )
+
+    def _entail_then_delta():
+        e = rdfs_plus_entail(_triples(spark, schema + base))
+        return rdfs_plus_entail_delta(e, _triples(spark, delta)).count()
+
+    n_inc, jobs_inc = _jobs_of(spark, "plus_delta_job_guard", _entail_then_delta)
+    assert (n_full, n_inc) == (19, 51)
+    assert jobs_full <= PLUS_ENTAIL_MAX_JOBS, jobs_full
+    assert jobs_inc <= PLUS_DELTA_MAX_JOBS, jobs_inc
+
+
+def _rows(df):
+    """The rows of ``df`` as a multiset."""
+    from collections import Counter
+
+    return Counter(tuple(r) for r in df.collect())
+
+
+def test_seminaive_round_cap_raises_then_converges(spark):
+    """The avf → svf1 chain needs two productive rounds and a third
+    that finds nothing; the class-expression chain needs three and a
+    fourth. One round fewer raises the no-fixpoint error; exactly
+    enough returns the default's rows."""
+    import pytest as _pytest
+
+    from sifr_project_java_ontology_processing_spark.operators.inference import (
+        OWL_ALLVALUES,
+        OWL_INTERSECTION,
+        OWL_ONPROPERTY,
+        OWL_SOMEVALUES,
+        OWL_UNION,
+        class_expressions_entail,
+        restrictions_entail,
+    )
+
+    restr = _triples(spark, [
+        _iri("A", OWL_ALLVALUES, "D"),
+        _iri("A", OWL_ONPROPERTY, "p"),
+        _iri("S", OWL_SOMEVALUES, "D"),
+        _iri("S", OWL_ONPROPERTY, "p"),
+        _iri("a", RDF_TYPE, "A"),
+        _iri("a", "p", "b"),  # round 1: b type D; round 2: a type S
+    ])
+    with _pytest.raises(ValueError, match="restrictions_entail: no fixpoint"):
+        restrictions_entail(restr, max_rounds=2)
+    assert _rows(restrictions_entail(restr, max_rounds=3)) == _rows(
+        restrictions_entail(restr)
+    )
+
+    cls = _triples(spark, [
+        _iri("C1", OWL_INTERSECTION, "_:i0"),
+        *_rdf_list("_:i", [("A", None, False), ("B", None, False)]),
+        _iri("C2", OWL_UNION, "_:u0"),
+        *_rdf_list("_:u", [("A", None, False), ("E", None, False)]),
+        _iri("C3", OWL_INTERSECTION, "_:j0"),
+        *_rdf_list("_:j", [("C2", None, False), ("B", None, False)]),
+        # round 1: z type A, B; round 2: z type C2; round 3: z type C3
+        _iri("z", RDF_TYPE, "C1"),
+    ])
+    with _pytest.raises(ValueError, match="class_expressions_entail: no fixpoint"):
+        class_expressions_entail(cls, max_rounds=3)
+    assert _rows(class_expressions_entail(cls, max_rounds=4)) == _rows(
+        class_expressions_entail(cls)
+    )
+
+
+def test_seminaive_novelty_is_null_safe(spark):
+    """A derivable triple already asserted with NULL lang comes out
+    once; a derived twin whose lang is '' (not NULL) is a different
+    term and is kept next to the asserted NULL-lang one."""
+    from sifr_project_java_ontology_processing_spark.operators.inference import (
+        OWL_HASVALUE,
+        OWL_INTERSECTION,
+        OWL_ONPROPERTY,
+        class_expressions_entail,
+        restrictions_entail,
+    )
+
+    restr = _rows(restrictions_entail(_triples(spark, [
+        ("C", OWL_HASVALUE, "v", None, False),
+        _iri("C", OWL_ONPROPERTY, "p"),
+        _iri("x", "p", "v"),
+        _iri("x", RDF_TYPE, "C"),  # asserted AND derived by cls-hv2
+        ("R", OWL_HASVALUE, "red", "", True),
+        _iri("R", OWL_ONPROPERTY, "color"),
+        _iri("y", RDF_TYPE, "R"),  # cls-hv1: y color "red"@""
+        ("y", "color", "red", None, True),
+    ])))
+    assert max(restr.values()) == 1
+    assert restr[("x", RDF_TYPE, "C", None, False)] == 1
+    assert restr[("y", "color", "red", "", True)] == 1
+    assert restr[("y", "color", "red", None, True)] == 1
+
+    cls = _rows(class_expressions_entail(_triples(spark, [
+        _iri("C", OWL_INTERSECTION, "_:i0"),
+        *_rdf_list("_:i", [("A", None, False), ("B", None, False)]),
+        _iri("C", RDFS_SUBCLASSOF, "A"),  # asserted AND derived by scm-int
+        _iri("x", RDF_TYPE, "A"),
+        _iri("x", RDF_TYPE, "B"),
+        _iri("x", RDF_TYPE, "C"),  # asserted AND derived by cls-int1
+        _iri("z", RDF_TYPE, "C"),
+        ("z", RDF_TYPE, "A", "", False),  # cls-int2 derives the NULL twin
+    ])))
+    assert max(cls.values()) == 1
+    assert cls[("C", RDFS_SUBCLASSOF, "A", None, False)] == 1
+    assert cls[("x", RDF_TYPE, "C", None, False)] == 1
+    assert cls[("z", RDF_TYPE, "A", "", False)] == 1
+    assert cls[("z", RDF_TYPE, "A", None, False)] == 1
