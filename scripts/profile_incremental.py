@@ -5,6 +5,8 @@ query composes so the optimization targets the real cost:
   1. fixture build alone
   2. rdfs_plus_entail(base) alone
   3. full query (entail + delta)
+Each phase runs in its own Spark job group and prints its wall time,
+its Spark jobs and the tasks those jobs completed.
 Run: SPARK_GRAFT_SF_DIR=... python scripts/profile_incremental.py
 """
 from __future__ import annotations
@@ -22,6 +24,19 @@ def noop(df):
     df.write.format("noop").mode("overwrite").save()
 
 
+def group_stats(sc, group: str) -> tuple[int, int]:
+    """(Spark jobs, tasks they completed) of a job group."""
+    # the status store is fed by the asynchronous listener bus. Only
+    # completed tasks count: a skipped stage (shuffle output reused)
+    # runs none, and the store evicts skipped stages first.
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
+    infos = [tracker.getStageInfo(s) for s in stages]
+    return len(jobs), sum(i.numCompletedTasks for i in infos if i is not None)
+
+
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from sifr_project_java_ontology_processing_spark.plans.testdata_queries import (
@@ -37,7 +52,7 @@ def main() -> int:
     sc = spark.sparkContext
     t: dict[str, float] = {}
 
-    sc.setJobDescription("fixture build")
+    sc.setJobGroup("fixture", "fixture build")
     t0 = time.perf_counter()
     contains, adjacent, static = _rdfs_plus_fixture(spark, sf_dir)
     base = (
@@ -55,21 +70,23 @@ def main() -> int:
     noop(delta)
     t["fixture"] = time.perf_counter() - t0
 
-    sc.setJobDescription("rdfs_plus_entail(base) alone")
+    sc.setJobGroup("entail_base", "rdfs_plus_entail(base) alone")
     t0 = time.perf_counter()
     entailed = rdfs_plus_entail(base, max_transitive_depth=6)
     noop(entailed)
     t["entail_base"] = time.perf_counter() - t0
 
-    sc.setJobDescription("full incremental query")
+    sc.setJobGroup("full_query", "full incremental query")
     t0 = time.perf_counter()
     entailed2 = rdfs_plus_entail(base, max_transitive_depth=6)
     out = rdfs_plus_entail_delta(entailed2, delta, max_transitive_depth=6)
     noop(out)
     t["full_query"] = time.perf_counter() - t0
+    sc.setLocalProperty("spark.jobGroup.id", None)
 
     for k, v in t.items():
-        print(f"{k}: {v:.2f}s")
+        jobs, tasks = group_stats(sc, k)
+        print(f"{k}: {v:.2f}s  jobs={jobs}  tasks={tasks}")
     spark.stop()
     return 0
 

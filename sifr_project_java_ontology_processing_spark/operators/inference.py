@@ -39,7 +39,11 @@ nowhere but simply entailed one stratum deep, as in every production
 materializer).
 
 Every stratum frame with more than one consumer is lazily
-checkpointed, so it evaluates once.
+checkpointed, so it evaluates once. A stratum is a union of its input
+and the rule outputs, and a Spark union keeps every branch's
+partitions, so each stratum is coalesced back to the operator input's
+partition count before its checkpoint (``_stratum``); otherwise the
+task count multiplies at every stratum.
 
 The same module carries RDFS-Plus, incremental maintenance of both,
 and the OWL RL restriction / class-expression / consistency tiers.
@@ -132,6 +136,12 @@ def _append_new(e: DataFrame, fresh: DataFrame) -> DataFrame:
     return e.unionByName(_novel(fresh, e))
 
 
+def _stratum(df: DataFrame, n: int) -> DataFrame:
+    """Lazy checkpoint of a multi-branch stratum, coalesced to ``n``
+    partitions first. Coalesce is narrow: no shuffle, the same rows."""
+    return df.coalesce(n).localCheckpoint(eager=False)
+
+
 def _seminaive(facts: DataFrame, derive, max_rounds: int, name: str) -> DataFrame:
     """Semi-naive fixpoint of ``derive(delta, facts)`` — a list of
     derived triple frames, empty when no rule applies. ``facts`` comes
@@ -182,6 +192,7 @@ def rdfs_entail(
     *,
     max_schema_depth: int = 20,
     _sp: DataFrame | None = None,
+    _n: int | None = None,
 ) -> DataFrame:
     """Materialize the RDFS consequences of ``triples`` and return the
     ENTAILED graph (asserted ∪ inferred, distinct) in the same
@@ -192,13 +203,21 @@ def rdfs_entail(
     still ``"Hello"@en``); rdfs2/3/9 emit IRI-object ``rdf:type``
     triples with NULL lang. ``_sp`` (internal) supplies a precomputed
     subPropertyOf closure so ``rdfs_plus_entail`` does not re-run the
-    closure job chain.
+    closure job chain, and ``_n`` (internal) the partition count its
+    strata are coalesced back to; called on its own, the input is
+    lazily checkpointed and ``_n`` is read from that checkpoint.
     ``max_schema_depth`` bounds the subclass/subproperty closure depth
     (a deeper real hierarchy simply needs a larger bound; the closure
     loop stops at the ACTUAL hierarchy depth, so a generous bound
     costs nothing).
     """
     t = triples.select(*_TRIPLE_COLS)
+    if _n is None:
+        # read by the closure probe, the g1 union and the rdfs7 join:
+        # one lazy checkpoint, whose partition count is read without a
+        # job (on a live plan, .rdd would run its exchange stages)
+        t = t.localCheckpoint(eager=False)
+        _n = t.rdd.getNumPartitions()
 
     # --- stratum 1: property hierarchy (rdfs5 closure + rdfs7) -----------
     sp = (
@@ -214,7 +233,7 @@ def rdfs_entail(
     # branch plus every rule join probing it) — a lazy checkpoint
     # evaluates it once instead of re-deriving the whole subtree per
     # consumer
-    g1 = g1.localCheckpoint(eager=False)
+    g1 = _stratum(g1, _n)
 
     # --- stratum 2: class hierarchy + domain/range -----------------------
     # ONE schema-dim-sized slice feeds the subClassOf closure AND the
@@ -250,11 +269,11 @@ def rdfs_entail(
         .join(F.broadcast(rng), g1["pred"] == rng["_p"])
         .select(*_as_type_triple("obj", "_c"))
     )
-    g2 = (
+    g2 = _stratum(
         g1.unionByName(derived2)
         .unionByName(derived3)
-        .unionByName(sc.select(*_iri_triple("_sub", F.lit(RDFS_SUBCLASSOF), "_sup")))
-        .localCheckpoint(eager=False)
+        .unionByName(sc.select(*_iri_triple("_sub", F.lit(RDFS_SUBCLASSOF), "_sup"))),
+        _n,
     )
 
     # --- stratum 3: type inheritance (rdfs9) -----------------------------
@@ -262,7 +281,7 @@ def rdfs_entail(
     derived9 = types.join(F.broadcast(sc), types["obj"] == sc["_sub"]).select(
         *_as_type_triple("subj", "_sup")
     )
-    return g2.unionByName(derived9).distinct()
+    return g2.unionByName(derived9).coalesce(_n).distinct()
 
 
 def skos_audit(
@@ -491,7 +510,9 @@ def rdfs_plus_entail(
     P sequential ones.  Literal-object assertions never enter inverse /
     transitive expansion (their inverses/compositions are not valid
     RDF). Every stratum frame with several consumers is lazily
-    checkpointed, so each evaluates once."""
+    checkpointed, so each evaluates once, and coalesced back to the
+    input's partition count first, so the task count does not grow
+    with each stratum's union branches."""
     t = triples.select(*_TRIPLE_COLS)
 
     # stratum 0: equivalence desugaring (scm-eqc1 / scm-eqp1). Must run
@@ -517,8 +538,11 @@ def rdfs_plus_entail(
     # t is evaluated by the subPropertyOf closure probe AND again when
     # g1 materializes; when the input arrives as a live plan
     # (joins/unions upstream) each evaluation re-runs it. One lazy
-    # checkpoint; the g1 checkpoint below then copies from it.
+    # checkpoint; the g1 checkpoint below then copies from it. Its
+    # partition count is the one every stratum is coalesced back to
+    # (read on the checkpoint: no job).
     t = t.localCheckpoint(eager=False)
+    n = t.rdd.getNumPartitions()
 
     # stratum 1: property hierarchy (reuse rdfs_entail's rules later;
     # here we only need the generalized assertions for owl expansion)
@@ -529,7 +553,7 @@ def rdfs_plus_entail(
     # rdfs_entail) — without a checkpoint each broadcast build and
     # closure probe re-evaluates the full input stream (~10 evaluations
     # measured on the bench fixture)
-    g1 = t.unionByName(_rdfs7(t, sp)).localCheckpoint(eager=False)
+    g1 = _stratum(t.unionByName(_rdfs7(t, sp)), n)
 
     # stratum 2: inverse + symmetric expansion (IRI objects only).
     # The three property dimensions come from ONE schema-dim-sized
@@ -551,7 +575,7 @@ def rdfs_plus_entail(
     # g2 is read by the transitive-edge extraction AND three times by
     # the g3 expansion (x ∪ inv(x) ∪ sym(x) references x per branch) —
     # checkpoint once instead of four evaluations
-    g2 = _expand_inv_sym(g1, inv_both, sym).localCheckpoint(eager=False)
+    g2 = _stratum(_expand_inv_sym(g1, inv_both, sym), n)
 
     # stratum 3: pooled transitive closure over every TransitiveProperty
     closed = transitive_closure(
@@ -572,9 +596,9 @@ def rdfs_plus_entail(
     # `out` feeds BOTH the stratum-5 schema slice and the final union:
     # un-checkpointed, the whole entailed stream evaluates twice; one
     # lazy checkpoint halves that.
-    out = rdfs_entail(g3, max_schema_depth=max_schema_depth, _sp=sp).localCheckpoint(
-        eager=False
-    )
+    out = rdfs_entail(
+        g3, max_schema_depth=max_schema_depth, _sp=sp, _n=n
+    ).localCheckpoint(eager=False)
 
     # stratum 5: re-derive closed equivalences from mutual subsumption
     # (scm-eqc2 / scm-eqp2) — this is how ≡'s own symmetry and
@@ -582,9 +606,10 @@ def rdfs_plus_entail(
     # (sub-hierarchies + asserted equivalences) from `out` ONCE and
     # lazily checkpoint it: the self-joins below would otherwise each
     # re-evaluate the fact-scale entailed plan just to read a handful
-    # of schema rows. LAZY checkpoint (same as rdfs_entail's strata):
-    # materializes bottom-up on the first action, so building this plan
-    # stays job-free.
+    # of schema rows. The checkpoint is lazy, but only the copy into
+    # the block store waits for the first action: with adaptive
+    # execution the call itself runs the plan's exchange stages, here
+    # the repartition(4) shuffle over `out`.
     schema_slice = (
         out.where(
             F.col("pred").isin(
@@ -733,7 +758,8 @@ def rdfs_entail_delta(
     a full ``rdfs_entail`` over the union, which is always correct
     (entailment is idempotent). The old graph is lazily checkpointed
     once, since the schema views, the anti-join and the union all
-    re-read it.
+    re-read it. The delta is checkpointed before the rules, coalesced
+    back to at most the old graph's partition count.
     """
     d = delta.select(*_TRIPLE_COLS)
     e = entailed.select(*_TRIPLE_COLS).localCheckpoint(eager=False)
@@ -756,8 +782,10 @@ def rdfs_entail_delta(
     # lazy checkpoint before the rules: apply_rules_to_delta's union
     # tree references its input ~12× (see rdfs_plus_entail_delta) —
     # one delta-sized copy beats a dozen re-evaluations of the live
-    # delta plan
-    d = d.localCheckpoint(eager=False)
+    # delta plan. Coalesced to at most the old graph's partition count
+    # (read on its checkpoint: no job), as the union tree multiplies
+    # the delta's partitions by 12.
+    d = _stratum(d, e.rdd.getNumPartitions())
     fresh = apply_rules_to_delta(d, sp, sc, dom, rng).distinct()
     return _append_new(e, fresh)
 
@@ -806,7 +834,9 @@ def rdfs_plus_entail_delta(
     ~8 times (schema views, property dimensions, the two closure-bridge
     slices, the final anti-join + union), and when ``entailed`` arrives
     as a LIVE plan (the common test/pipeline composition) every read
-    would otherwise re-run the full base saturation."""
+    would otherwise re-run the full base saturation. The expanded delta
+    that enters the class rules is checkpointed too, coalesced back to
+    the old graph's partition count."""
     d = delta.select(*_TRIPLE_COLS)
     e = entailed.select(*_TRIPLE_COLS).localCheckpoint(eager=False)
     # ONE schema-dim-sized slice of the saturated graph feeds all seven
@@ -890,10 +920,12 @@ def rdfs_plus_entail_delta(
     # union branch re-evaluates the shared subtree), and without the
     # checkpoint every reference re-runs the delta bridging joins. The
     # frame is delta-sized, so the copy is the cheap side of that trade
-    # at any scale.
-    n3 = _expand_inv_sym(
-        n2.unionByName(_unpool(closed)), inv_both, sym
-    ).localCheckpoint(eager=False)
+    # at any scale. It is itself a 2 × 3-way union, so it is coalesced
+    # to the old graph's partition count (read on its checkpoint).
+    n3 = _stratum(
+        _expand_inv_sym(n2.unionByName(_unpool(closed)), inv_both, sym),
+        e.rdd.getNumPartitions(),
+    )
     fresh = apply_rules_to_delta(n3, sp, sc, dom, rng).distinct()
     return _append_new(e, fresh)
 

@@ -1347,17 +1347,38 @@ def test_rdf_list_cell_cap_raises(spark, monkeypatch):
 # anti-join count (about half of the runs on a 4-core host).
 PLUS_ENTAIL_MAX_JOBS = 41
 PLUS_DELTA_MAX_JOBS = 87
+# Completed tasks of the same two runs (120 and 227 measured): each
+# stratum is coalesced back to the input's partition count before its
+# checkpoint, where a union would keep every branch's partitions and
+# multiply the task count at each stratum (over 1,000 tasks per run).
+PLUS_ENTAIL_MAX_TASKS = 300
+PLUS_DELTA_MAX_TASKS = 350
+# Standalone rdfs_entail on _RDFS_ASSERTED: its input checkpoint and
+# the partition-count read on it add no job. The same entailment then
+# rdfs_entail_delta: 57 completed tasks measured.
+RDFS_ENTAIL_MAX_JOBS = 13
+RDFS_DELTA_MAX_TASKS = 100
 
 
 def _jobs_of(spark, group, action):
-    """(result of ``action()``, number of Spark jobs it submitted)."""
+    """(result of ``action()``, number of Spark jobs it submitted,
+    number of tasks those jobs completed)."""
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try:
         out = action()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    # the status store is fed by the asynchronous listener bus. Only
+    # completed tasks count: a skipped stage (shuffle output reused)
+    # runs none, and the store evicts skipped stages first.
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
+    infos = [tracker.getStageInfo(s) for s in stages]
+    tasks = sum(i.numCompletedTasks for i in infos if i is not None)
+    return out, len(jobs), tasks
 
 
 def test_rdfs_plus_entail_and_delta_job_counts(spark):
@@ -1367,7 +1388,7 @@ def test_rdfs_plus_entail_and_delta_job_counts(spark):
     )
 
     schema, base, delta = _plus_fixture(spark)
-    n_full, jobs_full = _jobs_of(
+    n_full, jobs_full, tasks_full = _jobs_of(
         spark,
         "plus_entail_job_guard",
         lambda: rdfs_plus_entail(_triples(spark, schema + base)).count(),
@@ -1377,10 +1398,66 @@ def test_rdfs_plus_entail_and_delta_job_counts(spark):
         e = rdfs_plus_entail(_triples(spark, schema + base))
         return rdfs_plus_entail_delta(e, _triples(spark, delta)).count()
 
-    n_inc, jobs_inc = _jobs_of(spark, "plus_delta_job_guard", _entail_then_delta)
+    n_inc, jobs_inc, tasks_inc = _jobs_of(
+        spark, "plus_delta_job_guard", _entail_then_delta
+    )
     assert (n_full, n_inc) == (19, 51)
     assert jobs_full <= PLUS_ENTAIL_MAX_JOBS, jobs_full
     assert jobs_inc <= PLUS_DELTA_MAX_JOBS, jobs_inc
+    assert tasks_full <= PLUS_ENTAIL_MAX_TASKS, tasks_full
+    assert tasks_inc <= PLUS_DELTA_MAX_TASKS, tasks_inc
+
+
+def _digest(rows):
+    """Order-free fingerprint of a row multiset."""
+    import hashlib
+
+    lines = sorted(f"{r!r}\t{n}" for r, n in rows.items())
+    return hashlib.sha256("\n".join(lines).encode()).hexdigest()[:16]
+
+
+def test_entailment_is_partition_independent(spark):
+    """rdfs_plus_entail and rdfs_entail return the same row multiset
+    whether the input arrives in 1, the default or 16 partitions, and
+    the multiset pinned before strata were coalesced."""
+    from sifr_project_java_ontology_processing_spark.operators.inference import (
+        rdfs_plus_entail,
+    )
+
+    schema, base, delta = _plus_fixture(spark)
+    cases = [
+        (rdfs_plus_entail, schema + base + delta, 51, "2b80da193c1a1805"),
+        (rdfs_entail, _RDFS_ASSERTED, 16, "f0127d271020ee4d"),
+    ]
+    for entail, asserted, n_rows, digest in cases:
+        df = _triples(spark, asserted)
+        default = _rows(entail(df))
+        assert sum(default.values()) == len(default) == n_rows
+        assert _digest(default) == digest
+        for layout in (df.coalesce(1), df.repartition(16)):
+            assert _rows(entail(layout)) == default
+
+
+def test_rdfs_entail_and_delta_job_counts(spark):
+    from sifr_project_java_ontology_processing_spark.operators.inference import (
+        rdfs_entail_delta,
+    )
+
+    n_full, jobs_full, _ = _jobs_of(
+        spark,
+        "rdfs_entail_job_guard",
+        lambda: rdfs_entail(_triples(spark, _RDFS_ASSERTED)).count(),
+    )
+    delta = [_iri("v", "p1", "w"), _iri("w", RDF_TYPE, "A")]
+
+    def _entail_then_delta():
+        e = rdfs_entail(_triples(spark, _RDFS_ASSERTED))
+        return rdfs_entail_delta(e, _triples(spark, delta)).count()
+
+    n_inc, _, tasks_inc = _jobs_of(spark, "rdfs_delta_job_guard", _entail_then_delta)
+    assert (n_full, n_inc) == (16, 24)
+    assert jobs_full <= RDFS_ENTAIL_MAX_JOBS, jobs_full
+    assert tasks_inc <= RDFS_DELTA_MAX_TASKS, tasks_inc
 
 
 def _rows(df):
