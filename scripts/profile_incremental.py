@@ -6,7 +6,9 @@ query composes so the optimization targets the real cost:
   2. rdfs_plus_entail(base) alone
   3. full query (entail + delta)
 Each phase runs in its own Spark job group and prints its wall time,
-its Spark jobs and the tasks those jobs completed.
+the CPU seconds of the process tree (this process, the JVM, the Python
+workers; JIT compiler threads left out, as perfbench counts them), its
+Spark jobs and the tasks those jobs completed.
 Run: SPARK_GRAFT_SF_DIR=... python scripts/profile_incremental.py
 """
 from __future__ import annotations
@@ -18,6 +20,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
+
+from perfbench.trace import tree_cpu_s  # noqa: E402
 
 
 def noop(df):
@@ -50,10 +54,11 @@ def main() -> int:
 
     spark = get_spark(app_name="profile-incremental")
     sc = spark.sparkContext
-    t: dict[str, float] = {}
+    t: dict[str, tuple[float, float]] = {}
+    pid = os.getpid()
 
     sc.setJobGroup("fixture", "fixture build")
-    t0 = time.perf_counter()
+    t0, c0 = time.perf_counter(), tree_cpu_s(pid)
     contains, adjacent, static = _rdfs_plus_fixture(spark, sf_dir)
     base = (
         contains.where(F.col("_k") % 7 != 0)
@@ -68,25 +73,25 @@ def main() -> int:
     )
     noop(base)
     noop(delta)
-    t["fixture"] = time.perf_counter() - t0
+    t["fixture"] = time.perf_counter() - t0, tree_cpu_s(pid) - c0
 
     sc.setJobGroup("entail_base", "rdfs_plus_entail(base) alone")
-    t0 = time.perf_counter()
+    t0, c0 = time.perf_counter(), tree_cpu_s(pid)
     entailed = rdfs_plus_entail(base, max_transitive_depth=6)
     noop(entailed)
-    t["entail_base"] = time.perf_counter() - t0
+    t["entail_base"] = time.perf_counter() - t0, tree_cpu_s(pid) - c0
 
     sc.setJobGroup("full_query", "full incremental query")
-    t0 = time.perf_counter()
+    t0, c0 = time.perf_counter(), tree_cpu_s(pid)
     entailed2 = rdfs_plus_entail(base, max_transitive_depth=6)
     out = rdfs_plus_entail_delta(entailed2, delta, max_transitive_depth=6)
     noop(out)
-    t["full_query"] = time.perf_counter() - t0
+    t["full_query"] = time.perf_counter() - t0, tree_cpu_s(pid) - c0
     sc.setLocalProperty("spark.jobGroup.id", None)
 
-    for k, v in t.items():
+    for k, (wall, cpu) in t.items():
         jobs, tasks = group_stats(sc, k)
-        print(f"{k}: {v:.2f}s  jobs={jobs}  tasks={tasks}")
+        print(f"{k}: {wall:.2f}s  cpu={cpu:.2f}s  jobs={jobs}  tasks={tasks}")
     spark.stop()
     return 0
 

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from sifr_project_java_ontology_processing_spark.operators.materialize import (
+    local_frame,
     materialize_once,
 )
 from pyspark.sql import functions as F
@@ -67,14 +68,11 @@ def _star_round(edges: DataFrame, large: bool) -> DataFrame:
 
 def _local_pairs(spark, rows: list[tuple], node_type) -> DataFrame:
     """(iri, canonical_iri) rows as a broadcast-hinted local relation of
-    the caller's node type (string IRIs or numeric ids), built through
-    the Arrow path of ``createDataFrame`` from pandas."""
-    import pandas as pd
+    the caller's node type (string IRIs or numeric ids)."""
     from pyspark.sql.types import StructField, StructType
 
-    cols = ["iri", "canonical_iri"]
-    schema = StructType([StructField(c, node_type) for c in cols])
-    return F.broadcast(spark.createDataFrame(pd.DataFrame(rows, columns=cols), schema))
+    schema = StructType([StructField(c, node_type) for c in ("iri", "canonical_iri")])
+    return F.broadcast(local_frame(spark, rows, schema))
 
 
 def connected_components(

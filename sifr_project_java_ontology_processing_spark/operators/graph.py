@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .materialize import local_frame
+
 
 def named_graph_edges(
     quads: DataFrame,
@@ -234,8 +236,8 @@ _CLOSURE_DRIVER_EDGE_MAX = 65_536  # edge count below which the closure
 # runs driver-side: a ≤65k-edge relation is dimension-class (a schema
 # hierarchy, a per-graph slice) — collecting it costs the same as one
 # broadcast, and the driver loop replaces the 2-jobs-per-BFS-level
-# frontier chain with one collect + one createDataFrame. Also the
-# rdf-list cell cap of inference._collect_rdf_lists.
+# frontier chain with one collect + one local_frame. Also the bound of
+# inference._bounded_collect (rdf-list cells, the RDFS-Plus schema).
 _CLOSURE_DRIVER_PAIR_MAX = 4_000_000  # output guard: a pathological
 # small graph (one long chain) has a quadratic closure; past this many
 # pairs the driver loop abandons its work and the distributed frontier
@@ -349,7 +351,7 @@ def transitive_closure(
 
     Hybrid: an edge set up to ``driver_threshold`` (default
     ``_CLOSURE_DRIVER_EDGE_MAX`` = 65,536; pass 0 to disable) closes
-    in a driver-side BFS loop — one collect + one createDataFrame
+    in a driver-side BFS loop — one collect + one ``local_frame``
     instead of 2 Spark jobs per level — with an output-size guard
     (``_CLOSURE_DRIVER_PAIR_MAX`` = 4M pairs) that falls back to the
     distributed loop for pathological quadratic closures. Larger edge
@@ -394,7 +396,7 @@ def transitive_closure(
                 StructField("depth", IntegerType(), False),
             ]
         )
-        paths = edges.sparkSession.createDataFrame(rows, schema)
+        paths = local_frame(edges.sparkSession, rows, schema)
     if truncated and max_depth is None:
         raise ValueError(
             "transitive_closure: no fixpoint in 1000 levels "

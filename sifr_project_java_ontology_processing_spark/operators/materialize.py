@@ -21,12 +21,18 @@ remaining trade-offs, accepted deliberately:
     ``DataFrame.checkpoint`` to reliable storage where a checkpoint
     dir is configured and the intermediate is worth the extra I/O
     (see canonicalize.connected_components' ``reliable`` flag).
+
+``local_frame`` is the other direction: rows built on the driver (a
+closure, a compiled schema, a union-find result) become a frame whose
+optimized plan is a ``LocalRelation``, so reading it starts no Python
+worker.
 """
 
 from __future__ import annotations
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 
 def materialize_once(df: DataFrame) -> DataFrame:
@@ -42,3 +48,20 @@ def materialize_once(df: DataFrame) -> DataFrame:
         return df.localCheckpoint(eager=True, storageLevel=level)
     except TypeError:  # older API without storageLevel
         return df.localCheckpoint(eager=True)
+
+
+def local_frame(spark: SparkSession, rows: list, schema: "StructType | str") -> DataFrame:
+    """Driver-built ``rows`` (tuples in ``schema`` order; ``schema`` a
+    StructType or a DDL string) as a frame. It goes through pandas and
+    Arrow, so the optimized plan is a ``LocalRelation``: a list given
+    to ``createDataFrame`` becomes a ``LogicalRDD``, and every scan of
+    that starts Python workers. An empty pandas frame still takes the
+    RDD path, so empty input is a ``limit(0)``, which the optimizer
+    folds into an empty ``LocalRelation``."""
+    import pandas as pd
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    pdf = pd.DataFrame(rows, columns=schema.fieldNames())
+    df = spark.createDataFrame(pdf, schema)
+    return df if rows else df.limit(0)

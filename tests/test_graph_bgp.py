@@ -353,6 +353,38 @@ def test_transitive_closure_pair_guard_falls_back(spark, monkeypatch):
     assert paths == ["driver", "distributed"]
 
 
+def _optimized_plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_local_frame_is_a_local_relation(spark):
+    """Driver-built frames plan as a LocalRelation, never a LogicalRDD:
+    empty input, plain rows, NULL string and boolean cells, and both
+    outcomes of transitive_closure's driver path."""
+    from sifr_project_java_ontology_processing_spark.operators.graph import (
+        transitive_closure,
+    )
+    from sifr_project_java_ontology_processing_spark.operators.materialize import (
+        local_frame,
+    )
+
+    ddl = "s string, flag boolean, n long"
+    rows = [("a", True, 1), (None, None, 2), ("c", False, 3)]
+    edges = spark.createDataFrame(_CLOSURE_EDGES, "src string, dst string")
+    cases = [
+        (local_frame(spark, [], ddl), []),
+        (local_frame(spark, rows, ddl), rows),
+        (transitive_closure(edges.limit(0)), []),
+        (transitive_closure(edges), None),
+    ]
+    for df, want in cases:
+        plan = _optimized_plan(df)
+        assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+        if want is not None:
+            assert [tuple(r) for r in df.collect()] == want
+    assert local_frame(spark, [], ddl).schema == local_frame(spark, rows, ddl).schema
+
+
 # ---------------------------------------------------------------------------
 # OPTIONAL / UNION
 # ---------------------------------------------------------------------------

@@ -726,6 +726,78 @@ def _plus_fixture(spark):
     return schema, base, delta
 
 
+def _chain_fixture():
+    """(x p y), p inv q, q ⊑ r, r inv s: entails (y q x), (y r x) and
+    (x s y) — a chain the table closes to a fixpoint."""
+    from sifr_project_java_ontology_processing_spark.operators.inference import (
+        OWL_INVERSEOF,
+    )
+
+    return [
+        _iri("x", "p:p", "y"),
+        _iri("p:p", OWL_INVERSEOF, "p:q"),
+        _iri("p:q", RDFS_SUBPROPERTYOF, "p:r"),
+        _iri("p:r", OWL_INVERSEOF, "p:s"),
+    ]
+
+
+def test_rdfs_plus_matches_worklist_oracle(spark):
+    """rdfs_plus_entail returns exactly the worklist oracle's closure,
+    each row once, on _plus_fixture and on the inverse/sub-property
+    chain."""
+    from perfbench.oracle import rdfs_plus_closure
+
+    from sifr_project_java_ontology_processing_spark.operators.inference import (
+        rdfs_plus_entail,
+    )
+
+    schema, base, delta = _plus_fixture(spark)
+    for rows in (schema + base + delta, _chain_fixture()):
+        got = _rows(rdfs_plus_entail(_triples(spark, rows)))
+        assert sum(got.values()) == len(got)
+        assert set(got) == rdfs_plus_closure(rows)
+    assert _iri("x", "p:s", "y") in got
+
+
+def test_rdfs_plus_schema_collect_is_bounded(spark, monkeypatch):
+    """More property axioms than the driver bound raise, naming it,
+    instead of being collected."""
+    import pytest as _pytest
+
+    from sifr_project_java_ontology_processing_spark.operators import inference
+
+    rows = _chain_fixture()[1:] + [_iri("x", "p:p", "y")]  # 3 axioms
+    monkeypatch.setattr(inference, "_CLOSURE_DRIVER_EDGE_MAX", 3)
+    assert _iri("x", "p:s", "y") in set(
+        _rows(inference.rdfs_plus_entail(_triples(spark, rows)))
+    )
+    monkeypatch.setattr(inference, "_CLOSURE_DRIVER_EDGE_MAX", 2)
+    with _pytest.raises(ValueError, match="> 2 .*_CLOSURE_DRIVER_EDGE_MAX"):
+        inference.rdfs_plus_entail(_triples(spark, rows))
+
+
+def test_rdfs_plus_meta_property_axioms(spark):
+    """A meta-property (ex:q ⊑ rdfs:domain) derives a domain axiom that
+    types the subjects of its property; a sub-property of
+    rdfs:subPropertyOf feeds the property hierarchy. The worklist
+    oracle reads neither (it never re-reads derived schema)."""
+    from sifr_project_java_ontology_processing_spark.operators.inference import (
+        rdfs_plus_entail,
+    )
+
+    rows = [
+        _iri("ex:q", RDFS_SUBPROPERTYOF, RDFS_DOMAIN),
+        _iri("p:r", "ex:q", "C"),
+        _iri("x", "p:r", "y"),
+        _iri("ex:sub", RDFS_SUBPROPERTYOF, RDFS_SUBPROPERTYOF),
+        _iri("p:a", "ex:sub", "p:b"),
+        _iri("u", "p:a", "v"),
+    ]
+    got = {(r.subj, r.pred, r.obj) for r in rdfs_plus_entail(_triples(spark, rows)).collect()}
+    assert {("p:r", RDFS_DOMAIN, "C"), ("x", RDF_TYPE, "C")} <= got
+    assert {("p:a", RDFS_SUBPROPERTYOF, "p:b"), ("u", "p:b", "v")} <= got
+
+
 def test_rdfs_plus_delta_equals_full_recompute(spark):
     from sifr_project_java_ontology_processing_spark.operators.inference import (
         rdfs_plus_entail,
@@ -1272,9 +1344,12 @@ _SCHEMA_SHAPES = [
 
 def test_schema_closure_driver_and_distributed_agree(spark, monkeypatch):
     """rdfs_entail / rdfs_plus_entail give the same rows when every
-    closure is forced onto the distributed frontier loop, and the
-    subClassOf closure holds each (_sub, _sup) pair once on both paths
-    (so it needs no trailing distinct)."""
+    ``transitive_closure`` is forced onto the distributed frontier loop
+    (rdfs_entail's two schema closures; rdfs_plus_entail's subClassOf
+    closure and pooled transitive closure — its property hierarchy is
+    compiled on the driver by design), and the subClassOf closure holds
+    each (_sub, _sup) pair once on both paths (so it needs no trailing
+    distinct)."""
     from sifr_project_java_ontology_processing_spark.operators import graph, inference
 
     schema, base, delta = _plus_fixture(spark)
@@ -1302,9 +1377,18 @@ def test_schema_closure_driver_and_distributed_agree(spark, monkeypatch):
     def _no_driver(*a):
         raise AssertionError("driver closure ran with the threshold at 0")
 
+    frontier_runs = []
+    real_frontier = graph._frontier_transitive_closure
+
+    def _frontier(*a):
+        frontier_runs.append(a)
+        return real_frontier(*a)
+
     monkeypatch.setattr(graph, "_CLOSURE_DRIVER_EDGE_MAX", 0)
     monkeypatch.setattr(graph, "_driver_transitive_closure", _no_driver)
+    monkeypatch.setattr(graph, "_frontier_transitive_closure", _frontier)
     assert entailed() == on_driver
+    assert len(frontier_runs) == 4  # 2 per entailer
     distributed_sc = sc_pairs()
 
     for pairs in (driver_sc, distributed_sc):
@@ -1340,19 +1424,16 @@ def test_rdf_list_cell_cap_raises(spark, monkeypatch):
 # ---------------------------------------------------------------------------
 
 # Spark jobs rdfs_plus_entail may run on _plus_fixture, and the same
-# entailment followed by rdfs_plus_entail_delta: every multi-consumer
-# stratum is checkpointed once and every schema dimension comes from
-# one pinned slice. The delta path runs 86 jobs, or 87 when adaptive
-# execution's stage timing adds one two-stage job to the final
-# anti-join count (about half of the runs on a 4-core host).
-PLUS_ENTAIL_MAX_JOBS = 41
-PLUS_DELTA_MAX_JOBS = 87
-# Completed tasks of the same two runs (120 and 227 measured): each
-# stratum is coalesced back to the input's partition count before its
-# checkpoint, where a union would keep every branch's partitions and
-# multiply the task count at each stratum (over 1,000 tasks per run).
-PLUS_ENTAIL_MAX_TASKS = 300
-PLUS_DELTA_MAX_TASKS = 350
+# entailment followed by rdfs_plus_entail_delta: the schema compiles on
+# the driver and the instance rules run as one explode pass. Measured
+# 8 and 22 jobs in 8 runs of a 4-core host; the bounds leave room for
+# adaptive execution to split a stage into a job of its own.
+PLUS_ENTAIL_MAX_JOBS = 10
+PLUS_DELTA_MAX_JOBS = 26
+# Completed tasks of the same two runs (24 and 56 measured): no stratum
+# unions multiply the partitions any more.
+PLUS_ENTAIL_MAX_TASKS = 40
+PLUS_DELTA_MAX_TASKS = 90
 # Standalone rdfs_entail on _RDFS_ASSERTED: its input checkpoint and
 # the partition-count read on it add no job. The same entailment then
 # rdfs_entail_delta: 57 completed tasks measured.
