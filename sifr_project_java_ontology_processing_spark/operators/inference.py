@@ -24,27 +24,25 @@ triples, so the right plan closes the SCHEMA first and then applies
 the instance rules map-side against it — the instance stream is
 scanned, never shuffled, until the single final ``distinct``.
 
-* ``rdfs_entail`` closes both hierarchies through
-  ``graph.transitive_closure`` and applies rdfs7 → (rdfs2 | rdfs3) →
-  rdfs9 as broadcast joins, with the subclass closure extracted after
-  rdfs7 (so ``subClassOf`` edges asserted via a subproperty of
-  ``rdfs:subClassOf`` are seen). Each stratum is lazily checkpointed
-  and coalesced back to the input's partition count (``_stratum``).
-* ``rdfs_plus_entail`` keeps the property-level schema in memory, as
-  Jena's ``OntModel`` does: ``_compile_schema`` closes it on the
-  driver into one rule table per predicate, which enters the plan as
-  a map literal, and ``_expand_facts`` applies every property rule as
-  one explode per triple. Only the class hierarchy and the transitive
-  closure stay distributed.
+One engine serves every rule profile; a ``_Profile`` names only the
+schema vocabulary it reads (``_RDFS`` or ``_RDFS_PLUS``). Like Jena's
+``OntModel``, it keeps the property-level schema in memory:
+``_compile_schema`` closes it on the driver into one rule table per
+predicate, which enters the plan as a map literal, and
+``_expand_facts`` applies every property rule as one explode per
+triple. Only the class hierarchy and, for RDFS-Plus, the transitive
+closure stay distributed. ``_entail`` is the body of ``rdfs_entail``
+and ``rdfs_plus_entail``; ``_entail_delta`` is the body of their
+incremental twins, and ``streaming/jobs.streaming_entail`` runs the
+same rule table over a stream.
 
-The same module carries incremental maintenance of both and the OWL RL
-restriction / class-expression / consistency tiers. They share one
-copy of each rule building block: ``_iri_triple`` (the select list of
-a derived IRI-object, NULL-lang triple), ``_rdfs7``, ``_pooled_edges``
-/ ``_unpool`` (the predicate-fused transitive edges), ``_novel`` (the
-null-safe set difference that ``_append_new`` and the fixpoints use)
-and ``_seminaive`` (the round loop of the restriction and
-class-expression fixpoints).
+The same module carries the OWL RL restriction / class-expression /
+consistency tiers. They share one copy of each rule building block:
+``_iri_triple`` (the select list of a derived IRI-object, NULL-lang
+triple), ``_pooled_edges`` / ``_unpool`` (the predicate-fused
+transitive edges), ``_novel`` (the null-safe set difference that
+``_append_new`` and the fixpoints use) and ``_seminaive`` (the round
+loop of the restriction and class-expression fixpoints).
 """
 
 from __future__ import annotations
@@ -106,15 +104,6 @@ def _declared_props(t: DataFrame, type_iri: str) -> DataFrame:
     )
 
 
-def _rdfs7(g: DataFrame, sp: DataFrame) -> DataFrame:
-    """rdfs7 over ``g`` against a broadcast (_sub, _sup) subPropertyOf
-    closure. The object TERM is copied verbatim, lang tag included
-    ("Hello"@en under Q is still "Hello"@en, not "Hello")."""
-    return g.join(F.broadcast(sp), g["pred"] == sp["_sub"]).select(
-        "subj", F.col("_sup").alias("pred"), "obj", "obj_lang", "obj_is_literal"
-    )
-
-
 def _union_all(frames: list[DataFrame]) -> DataFrame:
     return reduce(DataFrame.unionByName, frames)
 
@@ -134,12 +123,6 @@ def _append_new(e: DataFrame, fresh: DataFrame) -> DataFrame:
     """Append to ``e`` only the triples of ``fresh`` it does not already
     hold."""
     return e.unionByName(_novel(fresh, e))
-
-
-def _stratum(df: DataFrame, n: int) -> DataFrame:
-    """Lazy checkpoint of a multi-branch stratum, coalesced to ``n``
-    partitions first. Coalesce is narrow: no shuffle, the same rows."""
-    return df.coalesce(n).localCheckpoint(eager=False)
 
 
 def _seminaive(facts: DataFrame, derive, max_rounds: int, name: str) -> DataFrame:
@@ -208,78 +191,17 @@ def rdfs_entail(
     rdfs7 copies the object TERM verbatim (lexical form, lang tag,
     literal flag — ``"Hello"@en`` generalized under a superproperty is
     still ``"Hello"@en``); rdfs2/3/9 emit IRI-object ``rdf:type``
-    triples with NULL lang. The input is lazily checkpointed, and the
-    strata are coalesced back to that checkpoint's partition count.
-    ``max_schema_depth`` bounds the subclass/subproperty closure depth
-    (a deeper real hierarchy simply needs a larger bound; the closure
-    loop stops at the ACTUAL hierarchy depth, so a generous bound
-    costs nothing).
+    triples with NULL lang, and rdfs9 reads the IRI-object typings.
+    The closed subClassOf and subPropertyOf pairs are entailed as
+    triples too. It is ``rdfs_plus_entail``'s plan over the RDFS
+    vocabulary (``_RDFS``): the property hierarchy, domains and ranges
+    compile on the driver into one rule table, and only the subClassOf
+    closure runs distributed. ``max_schema_depth`` bounds the
+    subclass/subproperty closure depth (a deeper real hierarchy simply
+    needs a larger bound; the closure loop stops at the ACTUAL
+    hierarchy depth, so a generous bound costs nothing).
     """
-    # read by the closure probe, the g1 union and the rdfs7 join: one
-    # lazy checkpoint, whose partition count is read without a job (on
-    # a live plan, .rdd would run its exchange stages)
-    t = triples.select(*_TRIPLE_COLS).localCheckpoint(eager=False)
-    n = t.rdd.getNumPartitions()
-
-    # --- stratum 1: property hierarchy (rdfs5 closure + rdfs7) -----------
-    sp = _schema_closure(t, RDFS_SUBPROPERTYOF, max_depth=max_schema_depth)
-    # rdfs5/rdfs11 also ENTAIL the closed schema pairs as triples
-    g1 = t.unionByName(_rdfs7(t, sp)).unionByName(
-        sp.select(*_iri_triple("_sub", F.lit(RDFS_SUBPROPERTYOF), "_sup"))
-    )
-    # each stratum frame has SEVERAL consumers (the next stratum's union
-    # branch plus every rule join probing it) — a lazy checkpoint
-    # evaluates it once instead of re-deriving the whole subtree per
-    # consumer
-    g1 = _stratum(g1, n)
-
-    # --- stratum 2: class hierarchy + domain/range -----------------------
-    # ONE schema-dim-sized slice feeds the subClassOf closure AND the
-    # domain/range dimensions: without it each build is its own full
-    # scan of the (fact-scale) g1 stream — three passes where one
-    # suffices (guide §2.3 "shuffle/scan fewer bytes"). The slice is a
-    # lazy localCheckpoint: the sc closure's collect materializes it,
-    # dom/rng then read the tiny materialized frame.
-    schema_slice = (
-        g1.where(
-            F.col("pred").isin(RDFS_SUBCLASSOF, RDFS_DOMAIN, RDFS_RANGE)
-            & ~F.col("obj_is_literal")
-        )
-        .select(*_TRIPLE_COLS)
-        .localCheckpoint(eager=False)
-    )
-    sc = _schema_closure(schema_slice, RDFS_SUBCLASSOF, max_depth=max_schema_depth)
-    dom = (
-        schema_slice.where(F.col("pred") == RDFS_DOMAIN)
-        .select(F.col("subj").alias("_p"), F.col("obj").alias("_c"))
-        .distinct()
-    )
-    rng = (
-        schema_slice.where(F.col("pred") == RDFS_RANGE)
-        .select(F.col("subj").alias("_p"), F.col("obj").alias("_c"))
-        .distinct()
-    )
-    derived2 = g1.join(F.broadcast(dom), g1["pred"] == dom["_p"]).select(
-        *_as_type_triple("subj", "_c")
-    )
-    derived3 = (
-        g1.where(~F.col("obj_is_literal"))
-        .join(F.broadcast(rng), g1["pred"] == rng["_p"])
-        .select(*_as_type_triple("obj", "_c"))
-    )
-    g2 = _stratum(
-        g1.unionByName(derived2)
-        .unionByName(derived3)
-        .unionByName(sc.select(*_iri_triple("_sub", F.lit(RDFS_SUBCLASSOF), "_sup"))),
-        n,
-    )
-
-    # --- stratum 3: type inheritance (rdfs9) -----------------------------
-    types = g2.where(F.col("pred") == RDF_TYPE)
-    derived9 = types.join(F.broadcast(sc), types["obj"] == sc["_sub"]).select(
-        *_as_type_triple("subj", "_sup")
-    )
-    return g2.unionByName(derived9).coalesce(n).distinct()
+    return _entail(triples, _RDFS, max_schema_depth)
 
 
 def skos_audit(
@@ -389,14 +311,30 @@ OWL_EQCLASS = "http://www.w3.org/2002/07/owl#equivalentClass"
 OWL_EQPROP = "http://www.w3.org/2002/07/owl#equivalentProperty"
 _PSEP = "\x00"  # joins pred onto node ids for the pooled closure
 
-# the property-level axioms rdfs_plus_entail compiles on the driver;
-# the class-level ones close distributedly
-_PROPERTY_AXIOMS = (
-    RDFS_SUBPROPERTYOF, OWL_EQPROP, RDFS_DOMAIN, RDFS_RANGE, OWL_INVERSEOF
+
+@dataclass(frozen=True)
+class _Profile:
+    """The schema vocabulary an entailer reads: ``props`` are the
+    property axioms compiled on the driver, ``classes`` the class
+    axioms closed through ``_schema_closure``, and ``types`` the
+    property characteristics typed with ``rdf:type``."""
+
+    props: tuple
+    classes: tuple
+    types: tuple
+
+    @property
+    def axioms(self) -> tuple:
+        return (*self.props, *self.classes)
+
+
+_RDFS = _Profile((RDFS_SUBPROPERTYOF, RDFS_DOMAIN, RDFS_RANGE), (RDFS_SUBCLASSOF,), ())
+_RDFS_PLUS = _Profile(
+    (RDFS_SUBPROPERTYOF, OWL_EQPROP, RDFS_DOMAIN, RDFS_RANGE, OWL_INVERSEOF),
+    (RDFS_SUBCLASSOF, OWL_EQCLASS),
+    (OWL_SYMMETRIC, OWL_TRANSITIVE),
 )
-_CLASS_AXIOMS = (RDFS_SUBCLASSOF, OWL_EQCLASS)
-_AXIOM_PREDS = (*_PROPERTY_AXIOMS, *_CLASS_AXIOMS)
-_SCHEMA_TYPES = (OWL_SYMMETRIC, OWL_TRANSITIVE)
+
 _TRIPLE_DDL = (
     "subj string, pred string, obj string, obj_lang string, obj_is_literal boolean"
 )
@@ -477,31 +415,29 @@ def _apply_rules(rules: dict, s: str, p: str, o: str, lit: bool) -> list[tuple]:
     return out
 
 
-def _schema_sources(rules: dict) -> tuple[set, set]:
+def _schema_sources(rules: dict, prof: _Profile) -> tuple[set, set]:
     """(preds, typing): a triple under a predicate of ``preds`` expands
-    into a schema axiom; one under a predicate of ``typing`` does when
-    its object is SymmetricProperty or TransitiveProperty."""
-    preds, typing = set(_AXIOM_PREDS), {RDF_TYPE}
+    into a schema axiom of ``prof``; one under a predicate of
+    ``typing`` does when its object is one of ``prof.types``."""
+    preds, typing = set(prof.axioms), {RDF_TYPE}
     for p, emissions in rules.items():
         for q, c, _sw, _iri in emissions:
-            if (c is None and q in _AXIOM_PREDS) or (
-                q == RDF_TYPE and c in _SCHEMA_TYPES
-            ):
+            if (c is None and q in prof.axioms) or (q == RDF_TYPE and c in prof.types):
                 preds.add(p)
-            elif q == RDF_TYPE and c is None:
+            elif q == RDF_TYPE and c is None and prof.types:
                 typing.add(p)
     return preds, typing
 
 
-def _schema_triples(preds, typing) -> Column:
+def _schema_triples(preds, typing, prof: _Profile) -> Column:
     return F.col("pred").isin(*preds) | (
-        F.col("pred").isin(*typing) & F.col("obj").isin(*_SCHEMA_TYPES)
+        F.col("pred").isin(*typing) & F.col("obj").isin(*prof.types)
     )
 
 
 @dataclass(frozen=True)
 class _Schema:
-    """An RDFS-Plus schema compiled on the driver."""
+    """A schema compiled on the driver."""
 
     rules: dict  # predicate -> emissions, see _rule_table
     trans: list  # the TransitiveProperty predicates
@@ -518,11 +454,13 @@ class _Schema:
         return F.from_json(F.lit(json.dumps(table, sort_keys=True)), _RULES_TYPE)
 
 
-def _compile_schema(t: DataFrame, max_depth: int) -> _Schema:
-    """Compile the property-level RDFS-Plus schema of ``t`` on the
-    driver. One bounded collect fetches the subPropertyOf,
-    equivalentProperty, domain, range and inverseOf axioms and the
-    Symmetric/Transitive typings. The triples of a meta-property, one
+def _compile_schema(t: DataFrame, prof: _Profile, max_depth: int) -> _Schema:
+    """Compile the property-level schema of ``t`` in the vocabulary of
+    ``prof`` on the driver. One bounded collect fetches the
+    ``prof.props`` axioms and the ``prof.types`` typings (for
+    RDFS-Plus: subPropertyOf, equivalentProperty, domain, range and
+    inverseOf, and the Symmetric/Transitive typings). The triples of a
+    meta-property, one
     whose triples expand into a schema axiom (``ex:q ⊑ rdfs:domain``),
     come from a second bounded collect, run only when such a property
     exists; what they derive joins the axioms until nothing new
@@ -533,20 +471,22 @@ def _compile_schema(t: DataFrame, max_depth: int) -> _Schema:
         tuple(r)
         for r in _bounded_collect(
             t.where(
-                (F.col("pred").isin(*_PROPERTY_AXIOMS) & ~F.col("obj_is_literal"))
-                | ((F.col("pred") == RDF_TYPE) & F.col("obj").isin(*_SCHEMA_TYPES))
+                (F.col("pred").isin(*prof.props) & ~F.col("obj_is_literal"))
+                | ((F.col("pred") == RDF_TYPE) & F.col("obj").isin(*prof.types))
             ).select("subj", "pred", "obj"),
-            "RDFS-Plus property axioms (_CLOSURE_DRIVER_EDGE_MAX)",
+            "property axioms (_CLOSURE_DRIVER_EDGE_MAX)",
         )
     }
-    meta_rows, fetched = [], {*_AXIOM_PREDS, RDF_TYPE}
+    meta_rows, fetched = [], {*prof.axioms, RDF_TYPE}
     while True:
         rules, sp = _rule_table(axioms, max_depth)
-        preds, typing = _schema_sources(rules)
+        preds, typing = _schema_sources(rules, prof)
         meta = (preds | typing) - fetched
         if meta:
             meta_rows += _bounded_collect(
-                t.where(F.col("pred").isin(*meta) & _schema_triples(preds, typing))
+                t.where(
+                    F.col("pred").isin(*meta) & _schema_triples(preds, typing, prof)
+                )
                 .select("subj", "pred", "obj", "obj_is_literal"),
                 "meta-property triples (_CLOSURE_DRIVER_EDGE_MAX)",
             )
@@ -560,13 +500,14 @@ def _compile_schema(t: DataFrame, max_depth: int) -> _Schema:
         new = {
             (s, p, o)
             for s, p, o, _lit in derived
-            if p in _PROPERTY_AXIOMS or (p == RDF_TYPE and o in _SCHEMA_TYPES)
+            if p in prof.props or (p == RDF_TYPE and o in prof.types)
         } - axioms
         if not (new or meta):
             break
         axioms |= new
-    # scm-eqp2: mutual subsumption is equivalence
-    spset = set(sp)
+    # scm-eqp2, in a vocabulary with equivalentProperty: mutual
+    # subsumption is equivalence
+    spset = set(sp) if OWL_EQPROP in prof.props else set()
     eq = [(a, b) for a, b in sp if a != b and (b, a) in spset]
     return _Schema(
         rules=rules,
@@ -574,7 +515,7 @@ def _compile_schema(t: DataFrame, max_depth: int) -> _Schema:
         prop_rows=[(a, RDFS_SUBPROPERTYOF, b, None, False) for a, b in sp]
         + [(a, OWL_EQPROP, b, None, False) for a, b in eq],
         class_axioms=sorted(
-            (s, p, o, None, False) for s, p, o, _lit in derived if p in _CLASS_AXIOMS
+            (s, p, o, None, False) for s, p, o, _lit in derived if p in prof.classes
         ),
     )
 
@@ -624,6 +565,14 @@ def _with_supertypes(g: DataFrame, sc: DataFrame) -> DataFrame:
     )
 
 
+def _subclass_pairs(e: DataFrame) -> DataFrame:
+    """The (_sub, _sup) subClassOf slice of a saturated graph: it holds
+    its closure, each pair once."""
+    return e.where(
+        (F.col("pred") == RDFS_SUBCLASSOF) & ~F.col("obj_is_literal")
+    ).select(F.col("subj").alias("_sub"), F.col("obj").alias("_sup"))
+
+
 def _pooled_edges(g: DataFrame, trans: list) -> DataFrame:
     """Distinct ``pred\\x00subj -> pred\\x00obj`` edges of the IRI
     assertions on the ``trans`` predicates: fusing the predicate into
@@ -650,6 +599,45 @@ def _unpool(closed: DataFrame) -> DataFrame:
             F.substring_index("dst", _PSEP, -1),
         )
     )
+
+
+def _entail(
+    triples: DataFrame,
+    prof: _Profile,
+    max_schema_depth: int,
+    max_transitive_depth: int = 20,
+) -> DataFrame:
+    """The entailed graph of ``triples`` in the vocabulary of ``prof``:
+    the plan ``rdfs_plus_entail`` describes."""
+    t = triples.select(*_TRIPLE_COLS)
+    spark = t.sparkSession
+    schema = _compile_schema(t, prof, max_schema_depth)
+    cls = t.unionByName(local_frame(spark, schema.class_axioms, _TRIPLE_DDL))
+    eqc = OWL_EQCLASS if OWL_EQCLASS in prof.classes else None
+    sc = _schema_closure(cls, RDFS_SUBCLASSOF, max_depth=max_schema_depth, eq_iri=eqc)
+    schema_rows = [sc.select(*_iri_triple("_sub", F.lit(RDFS_SUBCLASSOF), "_sup"))]
+    if eqc:  # scm-eqc2, a self-join of the schema-sized closure
+        rev = sc.select(F.col("_sup").alias("_sub"), F.col("_sub").alias("_sup"))
+        schema_rows.append(
+            sc.join(rev, ["_sub", "_sup"])
+            .where(F.col("_sub") != F.col("_sup"))
+            .select(*_iri_triple("_sub", F.lit(OWL_EQCLASS), "_sup"))
+        )
+    schema_rows.append(local_frame(spark, schema.prop_rows, _TRIPLE_DDL))
+    facts = _expand_facts(t.unionByName(_union_all(schema_rows)), schema)
+    if schema.trans:
+        # the closure reads only the triples that expand into a
+        # transitive predicate
+        trans = set(schema.trans)
+        feeds = trans | {
+            p for p, es in schema.rules.items() if trans & {e[0] for e in es}
+        }
+        edges = _expand_facts(t.where(F.col("pred").isin(*feeds)), schema)
+        closed = transitive_closure(
+            _pooled_edges(edges, schema.trans), max_depth=max_transitive_depth
+        )
+        facts = facts.unionByName(_expand_facts(_unpool(closed), schema))
+    return _with_supertypes(facts, sc).distinct()
 
 
 def rdfs_plus_entail(
@@ -680,8 +668,9 @@ def rdfs_plus_entail(
     (operators/canonicalize.py::connected_components — rewriting to a
     canonical IRI beats materializing the O(n²) sameAs clique).
 
-    Plan: ``_compile_schema`` closes the property-level schema on the
-    driver into one rule table (bounded collects that raise past
+    Plan (``_entail`` over ``_RDFS_PLUS``; ``rdfs_entail`` runs it over
+    ``_RDFS``): ``_compile_schema`` closes the property-level schema on
+    the driver into one rule table (bounded collects that raise past
     their bound). The class hierarchy closes through
     ``_schema_closure``, whose hybrid keeps a large ontology
     distributed. The result is the distinct union of
@@ -692,118 +681,45 @@ def rdfs_plus_entail(
     one broadcast join against the subClassOf closure. Literal-object
     assertions never mirror or close (their inverses and compositions
     are not valid RDF)."""
-    t = triples.select(*_TRIPLE_COLS)
-    spark = t.sparkSession
-    schema = _compile_schema(t, max_schema_depth)
-    cls = t.unionByName(local_frame(spark, schema.class_axioms, _TRIPLE_DDL))
-    sc = _schema_closure(
-        cls, RDFS_SUBCLASSOF, max_depth=max_schema_depth, eq_iri=OWL_EQCLASS
-    )
-    rev = sc.select(F.col("_sup").alias("_sub"), F.col("_sub").alias("_sup"))
-    schema_rows = (
-        sc.select(*_iri_triple("_sub", F.lit(RDFS_SUBCLASSOF), "_sup"))
-        .unionByName(  # scm-eqc2, a self-join of the schema-sized closure
-            sc.join(rev, ["_sub", "_sup"])
-            .where(F.col("_sub") != F.col("_sup"))
-            .select(*_iri_triple("_sub", F.lit(OWL_EQCLASS), "_sup"))
-        )
-        .unionByName(local_frame(spark, schema.prop_rows, _TRIPLE_DDL))
-    )
-    facts = _expand_facts(t.unionByName(schema_rows), schema)
-    if schema.trans:
-        # the closure reads only the triples that expand into a
-        # transitive predicate
-        trans = set(schema.trans)
-        feeds = trans | {
-            p for p, es in schema.rules.items() if trans & {e[0] for e in es}
-        }
-        edges = _expand_facts(t.where(F.col("pred").isin(*feeds)), schema)
-        closed = transitive_closure(
-            _pooled_edges(edges, schema.trans), max_depth=max_transitive_depth
-        )
-        facts = facts.unionByName(_expand_facts(_unpool(closed), schema))
-    return _with_supertypes(facts, sc).distinct()
+    return _entail(triples, _RDFS_PLUS, max_schema_depth, max_transitive_depth)
 
 
-_SCHEMA_PREDS = (
-    RDFS_SUBCLASSOF,
-    RDFS_SUBPROPERTYOF,
-    RDFS_DOMAIN,
-    RDFS_RANGE,
-    OWL_INVERSEOF,
-)
+def _compose(a: DataFrame, b: DataFrame) -> DataFrame:
+    """(src, dst) pairs of a path a-edge then b-edge."""
+    return a.select("src", F.col("dst").alias("_mid")).join(
+        b.select(F.col("src").alias("_mid"), "dst"), "_mid"
+    ).select("src", "dst")
 
 
-def saturated_schema_views(
+def _entail_delta(
     entailed: DataFrame,
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
-    """(subPropertyOf, subClassOf, domain, range) views of an already-
-    ENTAILED graph — direct selects, no closure jobs (``rdfs_entail``
-    materializes its closures as triples, so the graph IS saturated)."""
-    e = entailed.select(*_TRIPLE_COLS)
-
-    def pairs(pred_iri: str, a: str, b: str) -> DataFrame:
-        out = (
-            e.where((F.col("pred") == pred_iri) & ~F.col("obj_is_literal"))
-            .select(F.col("subj").alias(a), F.col("obj").alias(b))
-            .distinct()
-        )
-        return out.where(F.col(a) != F.col(b)) if a == "_sub" else out
-
-    return (
-        pairs(RDFS_SUBPROPERTYOF, "_sub", "_sup"),
-        pairs(RDFS_SUBCLASSOF, "_sub", "_sup"),
-        pairs(RDFS_DOMAIN, "_p", "_c"),
-        pairs(RDFS_RANGE, "_p", "_c"),
-    )
-
-
-def apply_rules_to_delta(
-    d: DataFrame,
-    sp: DataFrame,
-    sc: DataFrame,
-    dom: DataFrame,
-    rng: DataFrame,
+    delta: DataFrame,
+    prof: _Profile,
+    max_schema_depth: int,
+    max_transitive_depth: int = 20,
 ) -> DataFrame:
-    """rdfs7/2/3/9 over a DELTA frame against saturated schema views —
-    every join is a broadcast, every stage stateless, so the same plan
-    drops into a STREAMING frame (streaming/jobs.streaming_entail).
-    Returns the delta plus its consequences, NOT deduplicated (batch
-    callers add ``.distinct()``; streams leave dedup to compaction)."""
-    n1 = d.unionByName(_rdfs7(d, sp))
-    d2 = n1.join(F.broadcast(dom), n1["pred"] == dom["_p"]).select(
-        *_as_type_triple("subj", "_c")
-    )
-    d3 = (
-        n1.where(~F.col("obj_is_literal"))
-        .join(F.broadcast(rng), n1["pred"] == rng["_p"])
-        .select(*_as_type_triple("obj", "_c"))
-    )
-    n2 = n1.unionByName(d2).unionByName(d3)
-    types = n2.where(F.col("pred") == RDF_TYPE)
-    d9 = types.join(F.broadcast(sc), types["obj"] == sc["_sub"]).select(
-        *_as_type_triple("subj", "_sup")
-    )
-    return n2.unionByName(d9)
-
-
-def _schema_in_delta(d: DataFrame, sp: DataFrame) -> bool:
-    """True when the delta carries schema: a triple whose predicate IS a
-    schema predicate (``_SCHEMA_PREDS``), types a property
-    characteristic, OR is a declared SUBPROPERTY of a schema predicate /
-    rdf:type in the old graph (rdfs7 would derive schema triples from
-    it — e.g. ex:q ⊑ rdfs:subClassOf — which the saturated-schema
-    shortcut cannot see). Two probes of the small delta; ``sp`` is the
-    saturated subPropertyOf view."""
-    meta_preds = sp.where(
-        F.col("_sup").isin(*_SCHEMA_PREDS) | (F.col("_sup") == RDF_TYPE)
-    ).select("_sub")
-    return not d.where(
-        F.col("pred").isin(*_SCHEMA_PREDS)
-        | ((F.col("pred") == RDF_TYPE) & F.col("obj").isin(*_SCHEMA_TYPES))
-    ).isEmpty() or not d.join(
-        F.broadcast(meta_preds), d["pred"] == meta_preds["_sub"], "left_semi"
-    ).isEmpty()
+    """The saturation of ``entailed`` ∪ ``delta`` in the vocabulary of
+    ``prof``: the plan ``rdfs_plus_entail_delta`` describes."""
+    d = delta.select(*_TRIPLE_COLS)
+    e = entailed.select(*_TRIPLE_COLS).localCheckpoint(eager=False)
+    schema = _compile_schema(e, prof, max_schema_depth)
+    if not d.where(
+        _schema_triples(*_schema_sources(schema.rules, prof), prof)
+    ).isEmpty():
+        return _entail(e.unionByName(d), prof, max_schema_depth, max_transitive_depth)
+    fresh = _expand_facts(d, schema)
+    if schema.trans:
+        d_edges = _pooled_edges(fresh, schema.trans).localCheckpoint(eager=True)
+        e_pairs = _pooled_edges(e, schema.trans)  # C: a pred-filtered slice
+        pre = d_edges.unionByName(_compose(e_pairs, F.broadcast(d_edges)))
+        bridged = (
+            pre.unionByName(_compose(pre, e_pairs))
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
+        closed = transitive_closure(bridged, max_depth=max_transitive_depth)
+        fresh = fresh.unionByName(_expand_facts(_unpool(closed), schema))
+    return _append_new(e, _with_supertypes(fresh, _subclass_pairs(e)).distinct())
 
 
 def rdfs_entail_delta(
@@ -818,59 +734,27 @@ def rdfs_entail_delta(
     graph already holds.
 
     This is what makes materialization viable at 100 TB: a daily batch
-    of new instance triples costs rules-over-the-DELTA (broadcast
-    joins against the already-closed schema) plus one null-safe
-    anti-join against the old graph (``_append_new``) — the old fact
-    stream is scanned once for the anti-join and never re-derived.
-    The schema closures are NOT recomputed: ``rdfs_entail``
-    materializes closed subClassOf/subPropertyOf pairs as triples, so
-    the old graph IS the closure (semi-naive evaluation's "use the
-    saturated database").
+    of new instance triples costs rules-over-the-DELTA (one explode
+    over the rule table compiled from the old graph's schema, and one
+    broadcast rdfs9 join) plus one null-safe anti-join against the old
+    graph (``_append_new``) — the old fact stream is scanned once for
+    the anti-join and never re-derived. The subClassOf closure is NOT
+    recomputed: ``rdfs_entail`` materializes the closed subClassOf
+    pairs as triples, so the old graph IS the closure (semi-naive
+    evaluation's "use the saturated database"); the property-level
+    schema compiles on the driver, as in the full operation.
 
     If the delta itself contains schema triples (subClassOf,
-    subPropertyOf, domain, range, inverseOf, or Symmetric/Transitive
-    typing) the saturated-schema shortcut is invalid — the operator
-    detects that with one probe of the (small) delta and falls back to
-    a full ``rdfs_entail`` over the union, which is always correct
-    (entailment is idempotent). The old graph is lazily checkpointed
-    once, since the schema views, the anti-join and the union all
-    re-read it. The delta is checkpointed before the rules, coalesced
-    back to at most the old graph's partition count.
+    subPropertyOf, domain or range axioms, or triples of a
+    meta-property that expand into one) the saturated-schema shortcut
+    is invalid — the operator detects that with one probe of the
+    (small) delta and falls back to a full ``rdfs_entail`` over the
+    union, which is always correct (entailment is idempotent). The old
+    graph is lazily checkpointed once, since the schema collect, the
+    subClassOf slice, the anti-join and the union all re-read it. It
+    is ``rdfs_plus_entail_delta``'s plan over the RDFS vocabulary.
     """
-    d = delta.select(*_TRIPLE_COLS)
-    e = entailed.select(*_TRIPLE_COLS).localCheckpoint(eager=False)
-    # one pinned schema slice for the four saturated views (see
-    # rdfs_plus_entail_delta) instead of four full scans of the old
-    # graph; materializes the lazy e-checkpoint as a side effect
-    e_schema = (
-        e.where(
-            F.col("pred").isin(
-                RDFS_SUBPROPERTYOF, RDFS_SUBCLASSOF, RDFS_DOMAIN, RDFS_RANGE
-            )
-            & ~F.col("obj_is_literal")
-        )
-        .select(*_TRIPLE_COLS)
-        .localCheckpoint(eager=True)
-    )
-    sp, sc, dom, rng = saturated_schema_views(e_schema)
-    if _schema_in_delta(d, sp):
-        return rdfs_entail(e.unionByName(d), max_schema_depth=max_schema_depth)
-    # lazy checkpoint before the rules: apply_rules_to_delta's union
-    # tree references its input ~12× (see rdfs_plus_entail_delta) —
-    # one delta-sized copy beats a dozen re-evaluations of the live
-    # delta plan. Coalesced to at most the old graph's partition count
-    # (read on its checkpoint: no job), as the union tree multiplies
-    # the delta's partitions by 12.
-    d = _stratum(d, e.rdd.getNumPartitions())
-    fresh = apply_rules_to_delta(d, sp, sc, dom, rng).distinct()
-    return _append_new(e, fresh)
-
-
-def _compose(a: DataFrame, b: DataFrame) -> DataFrame:
-    """(src, dst) pairs of a path a-edge then b-edge."""
-    return a.select("src", F.col("dst").alias("_mid")).join(
-        b.select(F.col("src").alias("_mid"), "dst"), "_mid"
-    ).select("src", "dst")
+    return _entail_delta(entailed, delta, _RDFS, max_schema_depth)
 
 
 def rdfs_plus_entail_delta(
@@ -912,32 +796,9 @@ def rdfs_plus_entail_delta(
     subClassOf and closure slices, the anti-join and the union all read
     it, and a LIVE ``entailed`` plan would re-run the base saturation
     for each."""
-    d = delta.select(*_TRIPLE_COLS)
-    e = entailed.select(*_TRIPLE_COLS).localCheckpoint(eager=False)
-    schema = _compile_schema(e, max_schema_depth)
-    if not d.where(_schema_triples(*_schema_sources(schema.rules))).isEmpty():
-        return rdfs_plus_entail(
-            e.unionByName(d),
-            max_schema_depth=max_schema_depth,
-            max_transitive_depth=max_transitive_depth,
-        )
-    # the saturated graph holds its subClassOf closure, each pair once
-    sc = e.where(
-        (F.col("pred") == RDFS_SUBCLASSOF) & ~F.col("obj_is_literal")
-    ).select(F.col("subj").alias("_sub"), F.col("obj").alias("_sup"))
-    fresh = _expand_facts(d, schema)
-    if schema.trans:
-        d_edges = _pooled_edges(fresh, schema.trans).localCheckpoint(eager=True)
-        e_pairs = _pooled_edges(e, schema.trans)  # C: a pred-filtered slice
-        pre = d_edges.unionByName(_compose(e_pairs, F.broadcast(d_edges)))
-        bridged = (
-            pre.unionByName(_compose(pre, e_pairs))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        closed = transitive_closure(bridged, max_depth=max_transitive_depth)
-        fresh = fresh.unionByName(_expand_facts(_unpool(closed), schema))
-    return _append_new(e, _with_supertypes(fresh, sc).distinct())
+    return _entail_delta(
+        entailed, delta, _RDFS_PLUS, max_schema_depth, max_transitive_depth
+    )
 
 
 OWL_FUNCTIONAL = "http://www.w3.org/2002/07/owl#FunctionalProperty"

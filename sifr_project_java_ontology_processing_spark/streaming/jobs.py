@@ -157,28 +157,23 @@ def streaming_entail(
 ) -> DataFrame:
     """Streaming RDFS rule application: each arriving asserted triple
     is emitted together with its rdfs7/2/3/9 consequences, derived
-    against a STATIC, already-saturated schema graph (batch-side
-    ``rdfs_entail`` output, or any graph whose subClassOf /
-    subPropertyOf triples are closed — pass a raw schema through
+    against a STATIC schema graph whose subClassOf triples are closed
+    (batch-side ``rdfs_entail`` output — pass a raw schema through
     ``rdfs_entail`` once at job start).
 
-    Stateless by construction: every rule is a broadcast stream-static
-    join (``inference.apply_rules_to_delta`` — the same plan the batch
-    ``rdfs_entail_delta`` runs over a delta), so there is no watermark
-    and no state store. Cross-batch DEDUPLICATION is deliberately not
-    here: consequence triples repeat if re-asserted, and the nightly
-    compaction (``rdfs_entail_delta`` on the accumulated batch) is the
-    set-semantics point — same split as streaming_curate vs batch
-    decontamination."""
-    from sifr_project_java_ontology_processing_spark.operators.inference import (
-        apply_rules_to_delta,
-        saturated_schema_views,
-    )
+    The plan is the one ``rdfs_entail_delta`` runs over a delta: the
+    schema graph's property rules compile on the driver (a bounded
+    collect that raises past ``_CLOSURE_DRIVER_EDGE_MAX`` rows), each
+    triple expands in one explode over that map literal, and rdfs9 is
+    one broadcast stream-static join. Stateless by construction: no
+    watermark and no state store. Cross-batch DEDUPLICATION is
+    deliberately not here: consequence triples repeat if re-asserted,
+    and the nightly compaction (``rdfs_entail_delta`` on the
+    accumulated batch) is the set-semantics point — same split as
+    streaming_curate vs batch decontamination."""
+    from sifr_project_java_ontology_processing_spark.operators import inference as inf
 
-    sp, sc, dom, rng = saturated_schema_views(schema_graph)
-    return apply_rules_to_delta(
-        triples_stream.select(
-            "subj", "pred", "obj", "obj_lang", "obj_is_literal"
-        ),
-        sp, sc, dom, rng,
-    )
+    g = schema_graph.select(*inf._TRIPLE_COLS)
+    schema = inf._compile_schema(g, inf._RDFS, max_depth=20)
+    facts = inf._expand_facts(triples_stream.select(*inf._TRIPLE_COLS), schema)
+    return inf._with_supertypes(facts, inf._subclass_pairs(g))
