@@ -20,15 +20,16 @@ DataFrame ops:
   small-star: for each node u, connect every smaller-or-equal neighbor
               (and u) to min(neighborhood ∪ {u}).
 
-Checkpointing: ``localCheckpoint`` each round cuts the lineage chain —
+Checkpointing: ``materialize_once`` each round cuts the lineage chain —
 without it, round k's plan contains all k self-joins and the optimizer
-re-plans an exponentially growing DAG (SURVEY.md §7.4 risk 3). On a real
-cluster use reliable ``checkpoint()`` with a checkpoint dir; local
-checkpoint is the sandbox substitute (switchable via ``reliable=``).
+re-plans an exponentially growing DAG (SURVEY.md §7.4 risk 3). A round
+REPLACES the edge set rather than adding to it, so this loop does not
+run on ``materialize.fixpoint`` (the accumulating loop).
 
 Convergence: a round is a fixpoint when no edge changes — detected with
 one ``isEmpty()`` on the changed-rows diff (an O(1)-row action, not a
-count over the full edge set).
+count over the full edge set). A graph still changing after
+``max_iter`` rounds raises instead of returning a non-fixpoint.
 """
 
 from __future__ import annotations
@@ -80,7 +81,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 25,
-    reliable: bool = False,
     driver_threshold: int = 200_000,
 ) -> DataFrame:
     """edges(src, dst) → (iri, canonical_iri): every node mapped to the
@@ -98,7 +98,8 @@ def connected_components(
     and scanning it starts no Python worker. The distributed
     large-star/small-star path below remains the scale route for
     fact-sized graphs (only it materializes the edge set); set
-    ``driver_threshold=0`` to force it.
+    ``driver_threshold=0`` to force it. It raises when round
+    ``max_iter`` still changed the edge set.
     """
     cur = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -126,21 +127,21 @@ def connected_components(
         rows = [(n, r) for n, r in ((n, find(n)) for n in parent) if n != r]
         return _local_pairs(edges.sparkSession, rows, cur.schema["u"].dataType)
 
-    cur = materialize_once(cur) if not reliable else cur.checkpoint(eager=True)
+    cur = materialize_once(cur)
     for _ in range(max_iter):
-        after_large = _star_round(cur, large=True)
-        after_small = _star_round(after_large, large=False)
-        after_small = (
-            materialize_once(after_small)
-            if not reliable
-            else after_small.checkpoint(eager=True)
+        after_small = materialize_once(
+            _star_round(_star_round(cur, large=True), large=False)
         )
         # fixpoint: edge sets identical — ONE action for both diff
         # directions (union of the two excepts, probed with limit(1))
         diff = after_small.exceptAll(cur).union(cur.exceptAll(after_small)).limit(1)
-        prev, cur = cur, after_small
+        cur = after_small
         if diff.isEmpty():
             break
+    else:
+        raise ValueError(
+            f"connected_components: no fixpoint within max_iter={max_iter} rounds"
+        )
 
     # at fixpoint every edge is (member, root)
     return cur.select(F.col("u").alias("iri"), F.col("v").alias("canonical_iri"))

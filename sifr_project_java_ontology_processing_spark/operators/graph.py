@@ -18,10 +18,11 @@ Scale design:
   shuffle disappears). Out-degrees are folded into the persisted edge
   frame so each iteration is scan→join→partial-agg→union, nothing
   else.
-* Each iteration ends with ``localCheckpoint`` — lineage is cut
-  exactly like canonicalize.connected_components, so 20 iterations do
-  not build a 20-deep physical lineage; the loop caches are released
-  once the checkpointed result materializes.
+* Each iteration ends with a lazy ``localCheckpoint`` — lineage is
+  cut, so 20 iterations do not build a 20-deep physical lineage; the
+  loop caches are released once the checkpointed result materializes.
+* The closure frontier and BFS accumulate, on ``materialize.fixpoint``;
+  pagerank and label propagation replace their state each iteration.
 * Dangling nodes (no out-edges) follow the classic Spark-example
   formulation: their mass is not redistributed; every node keeps the
   (1-d) teleport floor via the left join. This keeps the iteration a
@@ -36,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .materialize import local_frame
+from .materialize import fixpoint, local_frame
 
 
 def named_graph_edges(
@@ -90,7 +91,6 @@ def pagerank(
     iterations: int = 3,
     damping: float = 0.85,
     partitions: int | None = None,
-    eager_checkpoint: bool = False,
     reset_nodes: DataFrame | None = None,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list.
@@ -111,13 +111,12 @@ def pagerank(
     The resident edge frame pays exactly ONE exchange: repartition on
     src, then out-degree via a whole-partition window (a local sort,
     no groupBy+join-back), persisted. Each iteration shuffles only the
-    rank frame onto that partitioning. localCheckpoint per iteration
-    cuts lineage; it is LAZY by default, which defers only the copy
-    into the block store: with adaptive execution each call still runs
-    the iteration's exchange and broadcast stages (4 jobs per iteration
-    with ``partitions=4``: 12, 20 and 32 jobs at 1, 3 and 6
-    iterations). Set ``eager_checkpoint=True`` for very deep iteration
-    counts where logical-plan depth itself becomes a cost.
+    rank frame onto that partitioning. A lazy localCheckpoint per
+    iteration cuts lineage and defers only the copy into the block
+    store, which one final ``count()`` makes: with adaptive execution
+    each call still runs the iteration's exchange and broadcast stages
+    (4 jobs per iteration with ``partitions=4``: 12, 20 and 32 jobs at
+    1, 3 and 6 iterations).
     """
     from pyspark.sql import Window
 
@@ -178,10 +177,9 @@ def pagerank(
                     + F.lit(damping) * F.coalesce(F.col("_in"), F.lit(0.0))
                 ).alias("rank"),
             )
-            .localCheckpoint(eager=eager_checkpoint)
+            .localCheckpoint(eager=False)
         )
-    if not eager_checkpoint:
-        ranks.count()  # copy the lazy checkpoints into the block store
+    ranks.count()  # copy the lazy checkpoints into the block store
     # the result is checkpointed — release the loop caches instead of
     # pinning executor storage for the session lifetime
     e.unpersist()
@@ -285,8 +283,11 @@ def _frontier_transitive_closure(
     raw: DataFrame, cap: int, partitions: int | None
 ) -> tuple[DataFrame, bool]:
     """Distributed frontier BFS over ``(_mid, dst)`` edges, up to
-    ``cap`` levels. Returns ``(paths, truncated)`` — truncated when
-    level ``cap`` was reached with a non-empty frontier."""
+    ``cap`` levels, on ``materialize.fixpoint``: level 1 is the input,
+    and each round joins the frontier to the edges, keeps one row per
+    (src, dst) pair and drops the pairs already found. Returns
+    ``(paths, truncated)`` — truncated when level ``cap`` still found
+    new pairs."""
     if partitions is not None:
         n_part = partitions
     else:
@@ -303,34 +304,57 @@ def _frontier_transitive_closure(
         raw = raw.persist()
         n_part = max(1, min(conf_part, raw.count() // 65536 + 1))
     e = raw.repartition(n_part, "_mid").persist()
-    level = (
-        e.select(F.col("_mid").alias("src"), "dst")
-        .withColumn("depth", F.lit(1))
-        .localCheckpoint(eager=True)
-    )
-    if partitions is None:
-        raw.unpersist()  # e is materialized by the level-1 checkpoint
-    # `paths` stays a UNION of the eagerly-checkpointed per-level
-    # frames (each leaf already materialized) — re-checkpointing the
-    # accumulated union every level would rewrite O(levels²) rows.
-    paths, frontier, depth = level, level, 1
-    while depth < cap:
-        nxt = (
+
+    def step(frontier: DataFrame, paths: DataFrame) -> DataFrame:
+        return (
             frontier.withColumnRenamed("dst", "_mid")
             .repartition(n_part, "_mid")
             .join(e, "_mid")
             .select("src", "dst", (F.col("depth") + 1).alias("depth"))
             .dropDuplicates(["src", "dst"])
             .join(paths, ["src", "dst"], "left_anti")
-            .localCheckpoint(eager=True)
         )
-        if nxt.isEmpty():
-            break
-        paths = paths.unionByName(nxt)
-        frontier = nxt
-        depth += 1
+
+    level = e.select(F.col("_mid").alias("src"), "dst", F.lit(1).alias("depth"))
+    paths, converged = fixpoint(level, step, max_rounds=cap - 1)
+    if partitions is None:
+        raw.unpersist()
     e.unpersist()  # result is checkpointed; don't pin the edge cache
-    return paths, depth >= cap
+    return paths, not converged
+
+
+def _closure(
+    edges: DataFrame,
+    cap: int,
+    partitions: int | None = None,
+    driver_threshold: int | None = None,
+) -> tuple[DataFrame, bool]:
+    """``(paths, truncated)`` of ``(src, dst)`` edges: the body of
+    ``transitive_closure`` with the level cap ``cap``, truncated when
+    level ``cap`` still found new pairs. A caller that must not lose
+    pairs passes its depth bound + 1 and raises when truncated, so a
+    hierarchy exactly as deep as the bound still passes."""
+    raw = edges.select(F.col("src").alias("_mid"), "dst")
+    thresh = (
+        _CLOSURE_DRIVER_EDGE_MAX if driver_threshold is None else driver_threshold
+    )
+    if thresh:
+        sample = raw.limit(thresh + 1).collect()
+        closed = (
+            _driver_transitive_closure(sample, cap) if len(sample) <= thresh else None
+        )
+        if closed is not None:
+            from pyspark.sql.types import IntegerType, StructField, StructType
+
+            schema = StructType(
+                [
+                    StructField("src", raw.schema[0].dataType, True),
+                    StructField("dst", raw.schema[1].dataType, True),
+                    StructField("depth", IntegerType(), False),
+                ]
+            )
+            return local_frame(edges.sparkSession, closed[0], schema), closed[1]
+    return _frontier_transitive_closure(raw, cap, partitions)
 
 
 def transitive_closure(
@@ -347,7 +371,8 @@ def transitive_closure(
     hand-writes exactly the 2-hop case as chained joins,
     OntologyCUIProcessor mapping stage / cascade J3; this is the
     general fixed-point twin). The one closure loop of the package:
-    ``inference._schema_closure`` (rdfs5/rdfs11) is a projection of it.
+    ``inference``'s schema and transitive-property closures and the
+    SPARQL ``+``/``*`` paths run its body (``_closure``).
 
     Hybrid: an edge set up to ``driver_threshold`` (default
     ``_CLOSURE_DRIVER_EDGE_MAX`` = 65,536; pass 0 to disable) closes
@@ -357,46 +382,27 @@ def transitive_closure(
     distributed loop for pathological quadratic closures. Larger edge
     sets go straight to the frontier BFS below.
 
-    Frontier BFS over iterative self-joins: each level joins the
-    previous frontier to the (cached, src-partitioned) edge relation,
-    anti-joins already-seen pairs (so diamonds don't re-expand and the
-    first-seen depth is the minimum), and eagerly localCheckpoints to
-    cut lineage — the CC/pagerank scale shape. Every level ends with
-    an O(1) isEmpty probe on the checkpointed frontier, so the loop
-    stops at the graph's ACTUAL closure depth even when ``max_depth``
-    is a generous upper bound (a depth-20 bound over a depth-3
-    hierarchy costs 3 levels, not 20). Cycles are safe: the anti-join
-    is on (src, dst) PAIRS, and a finite graph has a finite closure,
-    so the frontier always empties — ``max_depth`` only truncates,
-    and the 1000-level default cap raises (a graph with a >1000-step
-    diameter needs an explicit bound). Either path emits a distinct
-    input's pairs once each: level 1 is the input itself, deeper
-    levels are deduplicated and anti-joined against earlier ones.
+    Frontier BFS on ``materialize.fixpoint``: each level joins the
+    previous frontier to the (cached, src-partitioned) edge relation
+    and anti-joins already-seen pairs (so diamonds don't re-expand and
+    the first-seen depth is the minimum); the loop stops at the
+    graph's ACTUAL closure depth even when ``max_depth`` is a generous
+    upper bound (a depth-20 bound over a depth-3 hierarchy costs 3
+    levels, not 20). Cycles are safe: the anti-join is on (src, dst)
+    PAIRS, and a finite graph has a finite closure, so the frontier
+    always empties — ``max_depth`` truncates by contract (pairs deeper
+    than it are left out, silently), and the 1000-level default cap
+    raises (a graph with a >1000-step diameter needs an explicit
+    bound). Either path emits a distinct input's pairs once each:
+    level 1 is the input itself, deeper levels are deduplicated and
+    anti-joined against earlier ones.
     """
-    raw = edges.select(F.col(src).alias("_mid"), F.col(dst).alias("dst"))
-    cap = max_depth if max_depth is not None else 1000
-    thresh = (
-        _CLOSURE_DRIVER_EDGE_MAX if driver_threshold is None else driver_threshold
+    paths, truncated = _closure(
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")),
+        max_depth if max_depth is not None else 1000,
+        partitions,
+        driver_threshold,
     )
-    closed = None
-    if thresh:
-        sample = raw.limit(thresh + 1).collect()
-        if len(sample) <= thresh:
-            closed = _driver_transitive_closure(sample, cap)
-    if closed is None:
-        paths, truncated = _frontier_transitive_closure(raw, cap, partitions)
-    else:
-        rows, truncated = closed
-        from pyspark.sql.types import IntegerType, StructField, StructType
-
-        schema = StructType(
-            [
-                StructField("src", raw.schema[0].dataType, True),
-                StructField("dst", raw.schema[1].dataType, True),
-                StructField("depth", IntegerType(), False),
-            ]
-        )
-        paths = local_frame(edges.sparkSession, rows, schema)
     if truncated and max_depth is None:
         raise ValueError(
             "transitive_closure: no fixpoint in 1000 levels "
@@ -550,13 +556,15 @@ def bfs_distances(
     Unreached nodes are absent. The KG use: ontology-root distance /
     provenance-hop audits over the materialized edge table.
 
-    Same frontier discipline as transitive_closure: the edge relation
-    is repartitioned on src ONCE and persisted; each level joins the
-    (small) frontier against it, anti-joins the visited set (so a node
+    Same frontier discipline as transitive_closure, on
+    ``materialize.fixpoint``: the edge relation is repartitioned on src
+    ONCE and persisted; each level joins the (small) frontier against
+    it, keeps one row per node, anti-joins the visited set (so a node
     keeps its first — minimal — distance and diamonds don't re-expand),
-    and localCheckpoints to cut lineage. Depth-bounded: no driver
-    fixpoint probe per level below ``max_depth``; an early-empty
-    frontier short-circuits with one O(1) isEmpty probe per level.
+    and localCheckpoints to cut lineage. The visited set is the union
+    of the checkpointed levels, never re-copied. Depth-bounded: nodes
+    farther than ``max_depth`` are left out by contract; an
+    early-empty frontier short-circuits with one O(1) isEmpty probe.
     """
     n_part = partitions or int(
         edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
@@ -566,28 +574,23 @@ def bfs_distances(
         .repartition(n_part, "_from")
         .persist()
     )
-    visited = (
-        sources.select(F.col(sources.columns[0]).alias("node"))
-        .distinct()
-        .withColumn("dist", F.lit(0))
-        .localCheckpoint(eager=True)
-    )
-    frontier = visited
-    for depth in range(1, max_depth + 1):
-        nxt = (
+
+    def step(frontier: DataFrame, visited: DataFrame) -> DataFrame:
+        return (
             frontier.withColumnRenamed("node", "_from")
             .repartition(n_part, "_from")
             .join(e, "_from")
-            .select("node")
-            .distinct()
+            .select("node", (F.col("dist") + 1).alias("dist"))
+            .dropDuplicates(["node"])
             .join(visited, "node", "left_anti")
-            .withColumn("dist", F.lit(depth))
-            .localCheckpoint(eager=True)
         )
-        if nxt.isEmpty():
-            break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
+
+    seed = (
+        sources.select(F.col(sources.columns[0]).alias("node"))
+        .distinct()
+        .withColumn("dist", F.lit(0))
+    )
+    visited, _converged = fixpoint(seed, step, max_rounds=max_depth)
     e.unpersist()
     return visited
 

@@ -41,8 +41,13 @@ consistency tiers. They share one copy of each rule building block:
 ``_iri_triple`` (the select list of a derived IRI-object, NULL-lang
 triple), ``_pooled_edges`` / ``_unpool`` (the predicate-fused
 transitive edges), ``_novel`` (the null-safe set difference that
-``_append_new`` and the fixpoints use) and ``_seminaive`` (the round
-loop of the restriction and class-expression fixpoints).
+``_append_new`` and the fixpoints use) and ``_seminaive`` (the
+restriction and class-expression fixpoints' adapter onto
+``materialize.fixpoint``, the package's one accumulating round loop).
+
+A schema hierarchy deeper than ``max_schema_depth``, or a transitive
+chain deeper than ``max_transitive_depth``, raises (``_closure_within``)
+rather than return a truncated closure.
 """
 
 from __future__ import annotations
@@ -59,10 +64,11 @@ from ..functions.uris import expand
 from .graph import (
     _CLOSURE_DRIVER_EDGE_MAX,
     _CLOSURE_DRIVER_PAIR_MAX,
+    _closure,
     _driver_transitive_closure,
     transitive_closure,
 )
-from .materialize import local_frame
+from .materialize import fixpoint, local_frame
 
 RDF_TYPE = expand("rdf:type")
 RDFS_SUBCLASSOF = expand("rdfs:subClassOf")
@@ -127,30 +133,32 @@ def _append_new(e: DataFrame, fresh: DataFrame) -> DataFrame:
 
 def _seminaive(facts: DataFrame, derive, max_rounds: int, name: str) -> DataFrame:
     """Semi-naive fixpoint of ``derive(delta, facts)`` — a list of
-    derived triple frames, empty when no rule applies. ``facts`` comes
-    in eagerly checkpointed and is the first round's delta. Each round
-    dedups the derivations, keeps the rows ``facts`` does not hold
-    (``_novel``), checkpoints them, stops when none are new, and
-    otherwise unions them in as the next delta: a union of
-    eagerly-checkpointed leaves, so re-reads are cheap and the
-    accumulated graph is never re-copied per round (the
-    transitive_closure pattern). Raises when ``max_rounds`` rounds all
-    found something new."""
-    delta = facts
-    for _ in range(max_rounds):
-        derived = derive(delta, facts)
-        if not derived:
-            break
-        new = _novel(_union_all(derived).distinct(), facts).localCheckpoint(
-            eager=True
-        )
-        if new.isEmpty():
-            break
-        facts = facts.unionByName(new)
-        delta = new
-    else:
+    derived triple frames, empty when no rule applies — on
+    ``materialize.fixpoint``: ``facts`` is the first round's delta, and
+    each round keeps the distinct derivations ``facts`` does not hold
+    (``_novel``). Raises when ``max_rounds`` rounds all found something
+    new."""
+
+    def step(delta: DataFrame, acc: DataFrame) -> "DataFrame | None":
+        derived = derive(delta, acc)
+        return _novel(_union_all(derived).distinct(), acc) if derived else None
+
+    out, converged = fixpoint(facts, step, max_rounds=max_rounds)
+    if not converged:
         raise ValueError(f"{name}: no fixpoint within {max_rounds} rounds")
-    return facts
+    return out
+
+
+def _closure_within(
+    edges: DataFrame, bound: int, knob: str, partitions: int | None = None
+) -> DataFrame:
+    """``graph._closure`` of ``edges`` run one level past ``bound``:
+    raises, naming ``knob``, when a shortest path is longer than
+    ``bound`` edges instead of returning a truncated closure."""
+    closed, truncated = _closure(edges, bound + 1, partitions)
+    if truncated:
+        raise ValueError(f"closure deeper than {knob}={bound}")
+    return closed
 
 
 def _schema_closure(
@@ -158,8 +166,9 @@ def _schema_closure(
 ) -> DataFrame:
     """Transitive closure of one schema predicate as (sub, sup) pairs
     (closure depth collapsed — consumers only need reachability): a
-    projection of ``graph.transitive_closure``, whose driver/distributed
-    hybrid closes a schema-sized hierarchy in one driver loop. An
+    projection of ``graph.transitive_closure``'s body, whose
+    driver/distributed hybrid closes a schema-sized hierarchy in one
+    driver loop. A hierarchy deeper than ``max_depth`` raises. An
     ``eq_iri`` axiom counts as the predicate in both directions
     (scm-eqc1), read in the same scan. The edges are distinct, so each
     pair comes out once; derived self-pairs stay (a cycle A ⊑ B ⊑ A
@@ -175,7 +184,7 @@ def _schema_closure(
         .where(F.col("src") != F.col("dst"))
         .distinct()
     )
-    closed = transitive_closure(edges, max_depth=max_depth, partitions=8)
+    closed = _closure_within(edges, max_depth, "max_schema_depth", 8)
     return closed.select(F.col("src").alias("_sub"), F.col("dst").alias("_sup"))
 
 
@@ -197,8 +206,8 @@ def rdfs_entail(
     vocabulary (``_RDFS``): the property hierarchy, domains and ranges
     compile on the driver into one rule table, and only the subClassOf
     closure runs distributed. ``max_schema_depth`` bounds the
-    subclass/subproperty closure depth (a deeper real hierarchy simply
-    needs a larger bound; the closure loop stops at the ACTUAL
+    subclass/subproperty closure depth: a deeper hierarchy raises and
+    needs a larger bound (the closure loop stops at the ACTUAL
     hierarchy depth, so a generous bound costs nothing).
     """
     return _entail(triples, _RDFS, max_schema_depth)
@@ -378,10 +387,12 @@ def _rule_table(axioms: set, max_depth: int) -> tuple[dict, list]:
         elif o == OWL_SYMMETRIC:
             sym.add(s)
     closed = _driver_transitive_closure(
-        sorted(e for e in edges if e[0] != e[1]), max_depth
+        sorted(e for e in edges if e[0] != e[1]), max_depth + 1
     )
     if closed is None:
         raise ValueError(f"subPropertyOf closure > {_CLOSURE_DRIVER_PAIR_MAX} pairs")
+    if closed[1]:  # one level past the bound, as in _closure_within
+        raise ValueError(f"closure deeper than max_schema_depth={max_depth}")
     sp = sorted({(a, b) for a, b, _depth in closed[0]})
     for a, b in sp:
         sub[a].add(b)
@@ -633,9 +644,8 @@ def _entail(
             p for p, es in schema.rules.items() if trans & {e[0] for e in es}
         }
         edges = _expand_facts(t.where(F.col("pred").isin(*feeds)), schema)
-        closed = transitive_closure(
-            _pooled_edges(edges, schema.trans), max_depth=max_transitive_depth
-        )
+        pooled = _pooled_edges(edges, schema.trans)
+        closed = _closure_within(pooled, max_transitive_depth, "max_transitive_depth")
         facts = facts.unionByName(_expand_facts(_unpool(closed), schema))
     return _with_supertypes(facts, sc).distinct()
 
@@ -680,7 +690,9 @@ def rdfs_plus_entail(
     assertions with its pairs expanded again, and of rdfs9 over both:
     one broadcast join against the subClassOf closure. Literal-object
     assertions never mirror or close (their inverses and compositions
-    are not valid RDF)."""
+    are not valid RDF). A schema hierarchy deeper than
+    ``max_schema_depth`` or a transitive chain deeper than
+    ``max_transitive_depth`` raises."""
     return _entail(triples, _RDFS_PLUS, max_schema_depth, max_transitive_depth)
 
 
@@ -717,7 +729,7 @@ def _entail_delta(
             .distinct()
             .localCheckpoint(eager=True)
         )
-        closed = transitive_closure(bridged, max_depth=max_transitive_depth)
+        closed = _closure_within(bridged, max_transitive_depth, "max_transitive_depth")
         fresh = fresh.unionByName(_expand_facts(_unpool(closed), schema))
     return _append_new(e, _with_supertypes(fresh, _subclass_pairs(e)).distinct())
 
@@ -971,20 +983,21 @@ def apply_property_chains(
     prunable — never a scan of the whole graph per hop); literal
     objects cannot continue a path and are filtered before every hop.
     Chains whose output predicate feeds another chain converge by
-    iterated rounds: each round derives over the graph so far, keeps
-    only genuinely-new rows (anti-join of the round's SMALL derived
-    slice against the chain-output slice of the accumulated graph —
-    never a shuffle of the untouched base), checkpoints the frontier,
-    and stops at the fixpoint (O(1) isEmpty probe) or ``max_rounds``
-    (cycles through chain outputs are bounded, same stance as
-    transitive_closure's cap)."""
+    iterated rounds on ``materialize.fixpoint``: each round derives
+    over the graph so far and keeps only genuinely-new rows (anti-join
+    of the round's SMALL derived slice against the chain-output slice
+    of the accumulated graph — never a shuffle of the untouched base).
+    Cycles through chain outputs are bounded: the loop gets one round
+    past ``max_rounds``, and raises when that round still derives
+    something new rather than return an incomplete entailment."""
     t = triples.select(*_TRIPLE_COLS)
     if chains is None:
         chains = extract_property_chains(triples)
     if not chains:
         return t
+    key = ["subj", "pred", "obj", "obj_is_literal"]
 
-    def _derive(g: DataFrame) -> DataFrame:
+    def _new(_delta: DataFrame, g: DataFrame) -> DataFrame:
         iri = g.where(~F.col("obj_is_literal"))
         outs = []
         for r, elems in chains:
@@ -999,12 +1012,6 @@ def apply_property_chains(
                     "_s", F.col("_o2").alias("_o")
                 )
             outs.append(cur.select(*_iri_triple("_s", F.lit(r), "_o")))
-        return _union_all(outs).distinct()
-
-    g = t
-    converged = False
-    for _ in range(max_rounds):
-        new = _derive(g)
         # keep only rows not already asserted/derived — both anti-join
         # sides keyed on the derived slice (chain outputs), never a
         # shuffle of the untouched base graph. Full RDF-term identity:
@@ -1012,33 +1019,19 @@ def apply_property_chains(
         # chain-output predicate cannot suppress a genuinely new
         # derived IRI triple with the same lexical object (derived
         # rows are always is_literal=false, lang null).
-        new = new.join(
-            g.where(F.col("pred").isin([r for r, _ in chains])).select(
-                "subj", "pred", "obj", "obj_is_literal"
-            ),
-            ["subj", "pred", "obj", "obj_is_literal"],
+        return _union_all(outs).distinct().join(
+            g.where(F.col("pred").isin([r for r, _ in chains])).select(*key),
+            key,
             "left_anti",
-        ).localCheckpoint(eager=True)
-        if new.isEmpty():
-            converged = True
-            break
-        g = g.unionByName(new)
+        )
+
+    g, converged = fixpoint(t, _new, max_rounds=max_rounds + 1)
     if not converged:
-        # one O(1) probe past the cap: silence here would return an
-        # incomplete entailment with no signal (transitive_closure's
-        # cap raises for the same reason)
-        if not _derive(g).join(
-            g.where(F.col("pred").isin([r for r, _ in chains])).select(
-                "subj", "pred", "obj", "obj_is_literal"
-            ),
-            ["subj", "pred", "obj", "obj_is_literal"],
-            "left_anti",
-        ).isEmpty():
-            raise ValueError(
-                f"property chains did not reach a fixpoint within "
-                f"max_rounds={max_rounds} — raise max_rounds (self-feeding "
-                "chains derive one extra hop per round)"
-            )
+        raise ValueError(
+            f"property chains did not reach a fixpoint within "
+            f"max_rounds={max_rounds} — raise max_rounds (self-feeding "
+            "chains derive one extra hop per round)"
+        )
     return g
 
 
@@ -1387,9 +1380,7 @@ def restrictions_entail(
                 derived.append(_avf(delta, allf))
         return derived
 
-    return _seminaive(
-        t.localCheckpoint(eager=True), _derive, max_rounds, "restrictions_entail"
-    )
+    return _seminaive(t, _derive, max_rounds, "restrictions_entail")
 
 
 # ---------------------------------------------------------------------------
@@ -1592,12 +1583,12 @@ def class_expressions_entail(
             derived.append(u.select(*_as_type_triple("subj", "_c")))
         return derived
 
-    facts = t.localCheckpoint(eager=True)
+    facts = t
     if static_rows:
         # the schema-only rules derive once, before the loop; their new
         # rows are part of the first round's delta
         static = local_frame(spark, sorted(set(static_rows)), _TRIPLE_DDL)
-        facts = facts.unionByName(_novel(static, facts).localCheckpoint(eager=True))
+        facts = _append_new(t, static)
     return _seminaive(facts, _derive, max_rounds, "class_expressions_entail")
 
 

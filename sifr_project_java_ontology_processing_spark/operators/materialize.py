@@ -17,10 +17,12 @@ remaining trade-offs, accepted deliberately:
   * plan construction triggers a Spark job (the materialization is
     eager by design — lazy persist lets concurrent branches race and
     double-compute);
-  * a simultaneous loss of BOTH replicas still fails the job; use
-    ``DataFrame.checkpoint`` to reliable storage where a checkpoint
-    dir is configured and the intermediate is worth the extra I/O
-    (see canonicalize.connected_components' ``reliable`` flag).
+  * a simultaneous loss of BOTH replicas still fails the job; an
+    intermediate worth the extra I/O would need ``DataFrame.checkpoint``
+    to reliable storage under a configured checkpoint dir.
+
+``fixpoint`` is the package's one accumulating round loop: one
+checkpoint policy, one convergence test, one place to inject faults.
 
 ``local_frame`` is the other direction: rows built on the driver (a
 closure, a compiled schema, a union-find result) become a frame whose
@@ -29,6 +31,8 @@ worker.
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
@@ -65,3 +69,30 @@ def local_frame(spark: SparkSession, rows: list, schema: "StructType | str") -> 
     pdf = pd.DataFrame(rows, columns=schema.fieldNames())
     df = spark.createDataFrame(pdf, schema)
     return df if rows else df.limit(0)
+
+
+def fixpoint(
+    seed: DataFrame,
+    step: Callable[[DataFrame, DataFrame], DataFrame | None],
+    *,
+    max_rounds: int,
+) -> tuple[DataFrame, bool]:
+    """``(acc, converged)``: ``seed`` grown by ``step`` rounds until one
+    adds nothing. ``step(delta, acc)`` gets the last round's new rows
+    (round 1: the seed, the same object as ``acc``) and returns the
+    genuinely new ones — deduplicated, anti-joined against ``acc`` —
+    or None when no rule applies. The seed and every round are eagerly
+    ``localCheckpoint``-ed, so the per-round ``isEmpty`` probe reads
+    materialized blocks and ``acc`` is a union of checkpointed leaves,
+    never re-copied. ``converged`` is False when round ``max_rounds``
+    still added rows (always, for ``max_rounds`` < 1)."""
+    acc = delta = seed.localCheckpoint(eager=True)
+    for _ in range(max_rounds):
+        new = step(delta, acc)
+        if new is None:
+            return acc, True
+        new = new.localCheckpoint(eager=True)
+        if new.isEmpty():
+            return acc, True
+        acc, delta = acc.unionByName(new), new
+    return acc, False

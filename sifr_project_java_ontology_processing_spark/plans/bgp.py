@@ -60,11 +60,13 @@ varchar columns). Selected plain variables must appear in GROUP BY
 Property paths (predicate position): ``^iri`` inverse, ``a/b/c``
 sequences (desugared to fresh internal join variables), ``a|b|c``
 alternation of plain IRIs (compiled to one pushdown-eligible IN
-scan), and ``iri+`` / ``iri*`` closures (compiled to
-operators/graph.py::transitive_closure — iterative frontier BFS
-with per-level checkpointing, the CC/pagerank scale shape; ``*``
-adds the zero-length identity over every term in the graph, per
-SPARQL). Modifiers compose per element, so ``^a+/b`` works.
+scan), and ``iri+`` / ``iri*`` / ``iri?`` (the one-element path
+group below: ``+`` runs operators/graph.py::transitive_closure —
+iterative frontier BFS with per-level checkpointing, the CC/pagerank
+scale shape — over the distinct edges, so each pair comes out once
+even when a triple is duplicated; ``*`` adds the zero-length
+identity over every term in the graph, per SPARQL). Modifiers
+compose per element, so ``^a+/b`` works.
 Closure endpoints compare on the lexical form (lang tags do not
 discriminate path ends). Negated property sets ``!iri`` /
 ``!(a|b|c)`` match any predicate outside the set (one NOT-IN scan;
@@ -155,9 +157,12 @@ class Term:
     kind: 'var' (name without '?'), 'iri' (absolute IRI), or
     'literal' (lexical form, optional lang tag). Predicate positions
     additionally allow 'iri_alt' (``alts`` = alternation of plain
-    IRIs, one IN-filtered scan) and 'path_plus' / 'path_star' /
-    'path_opt' (one-or-more / zero-or-more / zero-or-one over the
-    IRI in ``value``).
+    IRIs, one IN-filtered scan), 'iri_neg' (negated property set)
+    and the path groups 'path_group' / 'path_group_plus' /
+    'path_group_star' / 'path_group_opt' (``alts`` = the encoded
+    alternatives of ``(seq | seq ...)``, bare or under ``+``/``*``/
+    ``?``). A single modified IRI (``iri+``, ``iri*``, ``iri?``) is
+    the one-element group.
     """
 
     kind: str
@@ -374,6 +379,11 @@ PathElt = tuple[bool, Term, "str | None"]
 # separator for encoding path-group sequences into Term.alts (IRIs may
 # contain '/', so a control char keeps the encoding unambiguous)
 _GSEP = "\x1f"
+# Term kind of a path group by its modifier
+_GROUP_KIND = {
+    "+": "path_group_plus", "*": "path_group_star", "?": "path_group_opt",
+    None: "path_group",
+}
 
 
 class _P:
@@ -894,12 +904,7 @@ def _parse_path(p: _P) -> list[PathElt]:
                     for alt in alternatives
                 ]
             mod = p.next() if p.peek() in ("+", "*", "?") else None
-            kind = {
-                "+": "path_group_plus",
-                "*": "path_group_star",
-                "?": "path_group_opt",
-                None: "path_group",
-            }[mod]
+            kind = _GROUP_KIND[mod]
             # element encoding: [^]iri[\x02mod] — \x02 cannot appear in
             # an IRI, so an IRI that happens to END in '+' stays exact
             enc = tuple(
@@ -994,19 +999,16 @@ def _emit_path(
 ) -> None:
     """Desugar one (subject, path, object) statement into triple
     patterns, threading fresh internal join variables between
-    sequence elements. Inverse elements swap endpoint roles; '+'/'*'
-    become closure predicates the executor expands."""
+    sequence elements. Inverse elements swap endpoint roles; an IRI
+    under '+'/'*'/'?' becomes the one-element path group the executor
+    expands."""
     cur = subj
     for k, (inv, term, mod) in enumerate(elts):
         nxt = obj if k == len(elts) - 1 else Term("var", p.fresh())
-        if mod == "+":
-            pred = Term("path_plus", term.value)
-        elif mod == "*":
-            pred = Term("path_star", term.value)
-        elif mod == "?":
-            pred = Term("path_opt", term.value)
-        else:
+        if mod is None:
             pred = term
+        else:
+            pred = Term(_GROUP_KIND[mod], term.value, alts=(term.value,))
         patterns.append((nxt, pred, cur) if inv else (cur, pred, nxt))
         cur = nxt
 
@@ -1532,12 +1534,8 @@ def _pattern_frame(
     s, p, o = pat
     if s.kind == "literal" or p.kind == "literal":
         raise ValueError("BGP: literal subjects/predicates are not valid RDF")
-    if p.kind in ("path_plus", "path_star", "path_opt") or p.kind.startswith(
-        "path_group"
-    ):
-        if p.kind.startswith("path_group"):
-            return _group_closure_frame(triples, pat, graph_var=graph_var)
-        return _closure_frame(triples, pat, graph_var=graph_var)
+    if p.kind.startswith("path_group"):
+        return _group_closure_frame(triples, pat, graph_var=graph_var)
     df = triples
     if graph_var is not None:
         df = df.where(F.col("graph").isNotNull())
@@ -1626,83 +1624,6 @@ def _pattern_frame(
 _GRAPH_SEP = "\x00"  # fuses the graph label into closure node keys
 
 
-def _closure_frame(
-    triples: DataFrame,
-    pat: tuple[Term, Term, Term],
-    graph_var: str | None = None,
-) -> tuple[DataFrame, set[str]]:
-    """One closure pattern: reachability over the single-predicate
-    edge relation via operators/graph.py::transitive_closure (frontier
-    BFS with per-level anti-join + localCheckpoint — the scale shape
-    that survives deep hierarchies). '*' unions the zero-length
-    identity over every term of the graph, per SPARQL. Endpoints
-    compare on the lexical form.
-
-    ``graph_var`` (GRAPH ?g groups): the input carries a ``graph``
-    column and the closure must stay WITHIN each named graph. The
-    label is fused into the node key (``graph\\x00node`` — the pooled
-    trick operators/inference.py uses for multi-predicate closures),
-    so ONE distributed closure job covers every graph and paths can
-    never hop between graphs; the label is split back out and bound
-    to the variable afterwards."""
-    from sifr_project_java_ontology_processing_spark.operators.graph import (
-        transitive_closure,
-    )
-
-    s, p, o = pat
-    src_df = triples.where(F.col("pred") == p.value)
-    if graph_var is not None:
-        src_df = src_df.where(F.col("graph").isNotNull())
-        edges = src_df.select(
-            F.concat_ws(_GRAPH_SEP, "graph", "subj").alias("src"),
-            F.concat_ws(_GRAPH_SEP, "graph", "obj").alias("dst"),
-        )
-    else:
-        edges = src_df.select(
-            F.col("subj").alias("src"), F.col("obj").alias("dst")
-        )
-    if p.kind == "path_opt":
-        # zero-or-one: the single edge, no closure loop at all
-        reach = edges.distinct()
-    else:
-        reach = transitive_closure(edges).select("src", "dst")
-    if p.kind in ("path_star", "path_opt"):
-        if graph_var is not None:
-            base = triples.where(F.col("graph").isNotNull())
-            nodes = (
-                base.select(
-                    F.concat_ws(_GRAPH_SEP, "graph", "subj").alias("n")
-                )
-                .unionByName(
-                    base.select(
-                        F.concat_ws(_GRAPH_SEP, "graph", "obj").alias("n")
-                    )
-                )
-                .distinct()
-            )
-        else:
-            nodes = (
-                triples.select(F.col("subj").alias("n"))
-                .unionByName(triples.select(F.col("obj").alias("n")))
-                .distinct()
-            )
-        reach = reach.unionByName(
-            nodes.select(F.col("n").alias("src"), F.col("n").alias("dst"))
-        ).distinct()
-    if graph_var is not None:
-        reach = reach.select(
-            F.substring_index("src", _GRAPH_SEP, 1).alias("_g"),
-            F.substring_index("src", _GRAPH_SEP, -1).alias("src"),
-            F.substring_index("dst", _GRAPH_SEP, -1).alias("dst"),
-        )
-        out, cols = _bind_closure_endpoints(
-            reach.select("src", "dst", F.col("_g")), s, o, extra=("_g",)
-        )
-        out = out.withColumnRenamed("_g", graph_var)
-        return out, cols | {graph_var}
-    return _bind_closure_endpoints(reach, s, o)
-
-
 def _bind_closure_endpoints(
     reach: DataFrame, s: Term, o: Term, extra: tuple[str, ...] = ()
 ) -> tuple[DataFrame, set[str]]:
@@ -1737,14 +1658,17 @@ def _group_closure_frame(
     compiled to a DERIVED (src, dst) edge frame — each alternative a
     chain of pred-filtered scans joined on fresh midpoints (inverse
     elements swap endpoint roles), alternatives unioned — and the
-    modifier then applies to that relation exactly as for a single
-    predicate: ``+`` runs operators/graph.py::transitive_closure over
-    the derived edges (the frontier-BFS scale shape), ``*``/``?`` add
-    the zero-length identity over every term of the graph. Endpoints
-    compare on the lexical form, as for plain closures.
+    modifier then applies to that relation: ``+`` runs
+    operators/graph.py::transitive_closure over the distinct derived
+    edges (the frontier-BFS scale shape), ``*``/``?`` add the
+    zero-length identity over every term of the graph. A single
+    modified IRI (``iri+``) is the one-element group. Endpoints compare
+    on the lexical form.
 
-    ``graph_var`` (GRAPH ?g groups): as in ``_closure_frame``, the
-    graph label is fused into BOTH endpoint keys (``graph\\x00node``)
+    ``graph_var`` (GRAPH ?g groups): the input carries a ``graph``
+    column and paths must stay WITHIN each named graph. The label is
+    fused into BOTH endpoint keys (``graph\\x00node`` — the pooled
+    trick operators/inference.py uses for multi-predicate closures),
     so chain midpoint joins and the closure stay within each named
     graph in ONE distributed job; the label splits back out afterwards
     and binds the variable."""

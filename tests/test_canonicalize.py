@@ -82,6 +82,19 @@ def test_cc_long_chain(spark):
     _check(spark, edges)
 
 
+def test_cc_raises_when_max_iter_ends_before_fixpoint(spark):
+    """The distributed star rounds raise when the last allowed round
+    still changed the edge set; the default max_iter converges to the
+    union-find mapping."""
+    import pytest
+
+    edges = [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(12)]
+    df = spark.createDataFrame(edges, "src string, dst string")
+    with pytest.raises(ValueError, match="connected_components: no fixpoint"):
+        connected_components(df, driver_threshold=0, max_iter=1)
+    _check(spark, edges, thresholds=(0,))
+
+
 def test_cc_random_graph(spark):
     rng = random.Random(3)
     nodes = [f"v{i:02d}" for i in range(50)]

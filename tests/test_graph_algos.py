@@ -89,6 +89,27 @@ def test_bfs_cycle_terminates(spark):
     assert d == {"a": 0, "b": 1, "c": 2}
 
 
+# Spark jobs bfs_distances may run over a 6-level chain: every level is
+# one fixpoint round (frontier join, dedup, anti-join, one eager
+# checkpoint, one isEmpty probe) and the visited set is never
+# re-checkpointed. Measured 54 jobs in 8 runs of a 4-core host (60
+# while each level also re-copied the visited set); the bound leaves
+# room for adaptive execution to split a stage into a job of its own.
+BFS_CHAIN_MAX_JOBS = 56
+
+
+def test_bfs_job_guard_on_a_chain(spark):
+    from .test_inference import _jobs_of
+
+    e = _edges(spark, [(f"v{i}", f"v{i + 1}") for i in range(6)])
+    srcs = spark.createDataFrame([("v0",)], "node string")
+    rows, jobs, _tasks = _jobs_of(
+        spark, "bfs_chain_job_guard", lambda: bfs_distances(e, srcs).collect()
+    )
+    assert {r.node: r.dist for r in rows} == {f"v{i}": i for i in range(7)}
+    assert jobs <= BFS_CHAIN_MAX_JOBS, jobs
+
+
 def test_lpa_two_cliques_bridge(spark):
     """Two triangles bridged by one edge: each clique converges to one
     label; fully deterministic under the (count desc, label asc) rule."""

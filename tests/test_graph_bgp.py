@@ -1377,6 +1377,31 @@ def test_path_group_rejects_nested_parens(spark):
         parse_sparql("SELECT ?x WHERE { ?x ((<p:p>/<p:q>)+/<p:r>) ?y }")
 
 
+def test_path_plus_pairs_once_over_duplicate_triples(spark):
+    """``<p>+`` is the one-element path group: a duplicated triple
+    yields each pair once, the same rows as ``(<p>)+``, on the driver
+    closure and on the distributed one."""
+    from collections import Counter
+
+    from sifr_project_java_ontology_processing_spark.operators import graph
+
+    t = spark.createDataFrame(
+        [(s, "p:p", o, None, False) for s, o in (("a", "b"), ("a", "b"), ("b", "c"))],
+        "subj string, pred string, obj string, obj_lang string, obj_is_literal boolean",
+    )
+
+    def pairs(path):
+        q = f"SELECT ?x ?y WHERE {{ ?x {path} ?y }}"
+        return Counter((r.x, r.y) for r in execute_bgp(t, q).collect())
+
+    want = Counter({("a", "b"): 1, ("b", "c"): 1, ("a", "c"): 1})
+    for threshold in (graph._CLOSURE_DRIVER_EDGE_MAX, 0):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(graph, "_CLOSURE_DRIVER_EDGE_MAX", threshold)
+            assert pairs("<p:p>+") == want
+            assert pairs("(<p:p>)+") == want
+
+
 # ---------------------------------------------------------------------------
 # RDF-term inspector builtins: lang/datatype/isIRI/isLiteral/isBlank/IF/COALESCE
 # ---------------------------------------------------------------------------

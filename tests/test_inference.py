@@ -787,6 +787,49 @@ def test_rdfs_plus_matches_worklist_oracle(spark):
     assert _iri("x", "p:s", "y") in got
 
 
+def test_depth_bounds_raise_instead_of_truncating(spark):
+    """A subPropertyOf, subClassOf or transitive chain 25 deep raises
+    under the default bounds of 20, naming the bound, in the full and
+    the incremental entailer; with the bounds at 25 it equals the
+    worklist oracle, and a chain exactly 20 deep passes at the
+    defaults."""
+    import pytest as _pytest
+    from perfbench.oracle import rdfs_plus_closure
+
+    from sifr_project_java_ontology_processing_spark.operators.inference import (
+        OWL_TRANSITIVE,
+        rdfs_plus_entail,
+        rdfs_plus_entail_delta,
+    )
+
+    def chain(pred, n):
+        return [_iri(f"n{i}", pred, f"n{i + 1}") for i in range(n)]
+
+    trans = [_iri("p:t", RDF_TYPE, OWL_TRANSITIVE)]
+    cases = {
+        "max_schema_depth": [
+            lambda n: chain(RDFS_SUBPROPERTYOF, n) + [_iri("x", "n0", "y")],
+            lambda n: chain(RDFS_SUBCLASSOF, n) + [_iri("x", RDF_TYPE, "n0")],
+        ],
+        "max_transitive_depth": [lambda n: trans + chain("p:t", n)],
+    }
+    bounds = {"max_schema_depth": 25, "max_transitive_depth": 25}
+    for knob, shapes in cases.items():
+        for shape in shapes:
+            with _pytest.raises(ValueError, match=f"{knob}=20"):
+                rdfs_plus_entail(_triples(spark, shape(25))).count()
+            for n, kw in ((25, bounds), (20, {})):
+                got = _rows(rdfs_plus_entail(_triples(spark, shape(n)), **kw))
+                assert set(got) == rdfs_plus_closure(shape(n)), (knob, n)
+    # the delta's bridged closure: the new edges chain among themselves
+    old = rdfs_plus_entail(_triples(spark, trans))
+    with _pytest.raises(ValueError, match="max_transitive_depth=20"):
+        rdfs_plus_entail_delta(old, _triples(spark, chain("p:t", 25))).count()
+    for n, kw in ((25, bounds), (20, {})):
+        got = _rows(rdfs_plus_entail_delta(old, _triples(spark, chain("p:t", n)), **kw))
+        assert set(got) == rdfs_plus_closure(trans + chain("p:t", n)), n
+
+
 def test_rdfs_plus_schema_collect_is_bounded(spark, monkeypatch):
     """More property axioms than the driver bound raise, naming it,
     instead of being collected."""
@@ -862,14 +905,14 @@ def test_rdfs_plus_delta_runs_no_full_entailment(spark, monkeypatch):
         raise AssertionError("full re-entailment called on the delta path")
 
     closure_inputs = []
-    real_closure = inference.transitive_closure
+    real_closure = inference._closure
 
-    def _spy_closure(edges, **kw):
+    def _spy_closure(edges, *a, **kw):
         closure_inputs.append(edges.count())
-        return real_closure(edges, **kw)
+        return real_closure(edges, *a, **kw)
 
     monkeypatch.setattr(inference, "_entail", _boom)
-    monkeypatch.setattr(inference, "transitive_closure", _spy_closure)
+    monkeypatch.setattr(inference, "_closure", _spy_closure)
     out = inference.rdfs_plus_entail_delta(e, _triples(spark, delta))
     n = out.count()
     assert n > 0
